@@ -38,8 +38,8 @@ object GraftSession {
       // explicit so it is tuned deliberately, not inherited
       .config("spark.sql.files.maxPartitionBytes", "128m")
       // joins: preferSortMergeJoin deliberately stays at its default
-      // (true). Round-16 within-ONE-session A/B (TimeLab `smjab`, the
-      // conf is a runtime SQLConf) measured the shuffled-hash
+      // (true). Round-16 within-ONE-session A/B (TimeLab `confab`;
+      // the conf is a runtime SQLConf) measured the shuffled-hash
       // preference REGRESSING the join-heavy surface ~10% (12-query
       // slice: SMJ 23.0 s vs SHJ 25.3 s min-of-2; q224 4.2→5.6) —
       // the hash build + lost output sortedness cost more than the

@@ -2,6 +2,8 @@ package graft.lake
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.util.Par
+
 /** Crash-atomic partition commit via the swap pattern (reference X2 —
   * `jobs/utils/retry.py:63-165`, crash matrix `README.md:247-281`):
   *
@@ -39,6 +41,9 @@ object AtomicPartitionWriter {
     * re-check fences even that.
     */
   val LeaseTtlMs: Long = 15L * 60L * 1000L
+
+  /** Staging jobs [[AtomicPartitionWriter.writeYears]] overlaps. */
+  val StagingWidth = 4
 
   /** Raised at a swap point when the committer's own lease is gone or
     * rewritten — the live-but-stalled-holder fence: a committer whose
@@ -242,116 +247,59 @@ class AtomicPartitionWriter(fsOps: LakeFs, spark: SparkSession) {
     throw Retry.RetriesExhausted(label, attempts, last)
   }
 
-  /** Write `df` as the new content of partition `year=Y` of `tableDir`.
-    * Returns the committed partition path.
+  /** Write `df` as the new content of partition `year=Y` of `tableDir`
+    * — the one-partition case of [[writeYears]]. Returns the committed
+    * partition path.
     */
   def write(df: DataFrame, tableDir: String, year: Int,
-      table: Option[String] = None): String = withCommitLease(tableDir) {
-    val tmp = partitionPath(tableDir, year, "_tmp")
-    val fin = partitionPath(tableDir, year)
-    val old = partitionPath(tableDir, year, "_old")
-    try {
-      df.write.mode("overwrite").parquet(tmp)
-      swap(tmp, fin, old)
-      // metastore sync BEFORE deleting the backup: a crash during the
-      // sync must leave `_old` for recovery (crash-matrix contract)
-      table.foreach(syncMetastore(_, tableDir, year))
-      if (fsOps.exists(old)) fsOps.delete(old)
-      fin
-    } catch {
-      case e: Throwable =>
-        if (fsOps.exists(tmp)) fsOps.delete(tmp)
-        throw e
-    }
-  }
+      table: Option[String] = None): String =
+    writeYears(Seq(year -> df), tableDir, table).head
 
-  /** [[write]] for SEVERAL year partitions of one table under ONE
-    * commit lease. The per-partition staging writes are independent
-    * Spark jobs, so they are submitted from a bounded driver pool and
-    * overlap (guide §2.6: one job's straggler tail back-fills with the
-    * next job's tasks — serially, a 7-partition rewrite pays 7 full
-    * job latencies); every swap then lands SEQUENTIALLY on the calling
-    * thread through the same backup-rename protocol as [[write]].
-    * Crash semantics per partition are unchanged: a staging failure
-    * deletes every partition's `_tmp` and fails the commit before ANY
-    * swap ran; a crash mid-swap leaves each partition either old or
-    * new plus `_tmp`/`_old` litter [[repair]] reaps; the metastore
-    * syncs before each partition's backup is deleted.
+  /** Commit SEVERAL year partitions of one table under ONE commit
+    * lease. The per-partition staging writes are independent Spark
+    * jobs, so up to [[AtomicPartitionWriter.StagingWidth]] of them
+    * overlap through [[Par.map]] (guide §2.6: one job's straggler tail
+    * back-fills with the next job's tasks — serially, a 7-partition
+    * rewrite pays 7 full job latencies); every swap then lands
+    * SEQUENTIALLY on the calling thread in year order. Crash semantics
+    * per partition: a staging failure deletes every partition's `_tmp`
+    * (once every staging job has finished) and fails the commit before
+    * ANY swap ran; a failure from the swap on deletes that partition's
+    * `_tmp`; a crash mid-swap leaves each partition either old or new
+    * plus `_tmp`/`_old` litter [[repair]] reaps; the metastore syncs
+    * before each partition's backup is deleted. Returns the committed
+    * partition paths in year order.
     */
   def writeYears(parts: Seq[(Int, DataFrame)], tableDir: String,
-      table: Option[String] = None,
-      maxParallel: Int = 4): Seq[String] = withCommitLease(tableDir) {
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.max(1, math.min(maxParallel, parts.size)))
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-    try {
-      try Await.result(Future.traverse(parts) { case (y, df) =>
-        Future {
-          df.write.mode("overwrite")
-            .parquet(partitionPath(tableDir, y, "_tmp"))
-        }
-      }, Duration.Inf)
-      catch {
-        case e: Throwable =>
-          parts.foreach { case (y, _) =>
-            val tmp = partitionPath(tableDir, y, "_tmp")
-            if (fsOps.exists(tmp)) fsOps.delete(tmp)
-          }
-          throw e
-      }
-      parts.map(_._1).sorted.map { y =>
-        val tmp = partitionPath(tableDir, y, "_tmp")
-        val fin = partitionPath(tableDir, y)
-        val old = partitionPath(tableDir, y, "_old")
-        try {
-          swap(tmp, fin, old)
-          table.foreach(syncMetastore(_, tableDir, y))
-          if (fsOps.exists(old)) fsOps.delete(old)
-          fin
-        } catch {
-          case e: Throwable =>
-            if (fsOps.exists(tmp)) fsOps.delete(tmp)
-            throw e
-        }
-      }
-    } finally pool.shutdown()
-  }
-
-  /** The same swap protocol for an arbitrary `col=value` partition
-    * directory (no metastore sync — callers with a registered table use
-    * [[write]]). The `_tmp`/`_old` suffix discipline is shared, so
-    * [[repair]] reaps crashed runs of EITHER entry point. Used by the
-    * curation endgame to commit `split=train/val/test` atomically.
-    */
-  def writePartitionDir(df: DataFrame, tableDir: String,
-      partDir: String): String = withCommitLease(tableDir) {
-    val tmp = s"$tableDir/${partDir}_tmp"
-    val fin = s"$tableDir/$partDir"
-    val old = s"$tableDir/${partDir}_old"
-    try {
-      df.write.mode("overwrite").parquet(tmp)
-      swap(tmp, fin, old)
-      if (fsOps.exists(old)) fsOps.delete(old)
-      fin
+      table: Option[String] = None): Seq[String] = withCommitLease(tableDir) {
+    def tmp(y: Int) = partitionPath(tableDir, y, "_tmp")
+    try Par.map(parts, AtomicPartitionWriter.StagingWidth) { case (y, df) =>
+      df.write.mode("overwrite").parquet(tmp(y))
     } catch {
       case e: Throwable =>
-        if (fsOps.exists(tmp)) fsOps.delete(tmp)
+        parts.foreach { case (y, _) => deleteIfExists(tmp(y)) }
         throw e
+    }
+    parts.map(_._1).sorted.map { y =>
+      try swapIn(tmp(y), partitionPath(tableDir, y),
+        partitionPath(tableDir, y, "_old"))(
+        table.foreach(syncMetastore(_, tableDir, y)))
+      catch {
+        case e: Throwable =>
+          deleteIfExists(tmp(y))
+          throw e
+      }
     }
   }
 
   /** Commit a WHOLE partitioned relation atomically per partition:
-    * `df` is written ONCE via `partitionBy(partCol)` into a `_tmp`
-    * staging dir (one pipeline evaluation however many partitions
-    * exist — per-partition [[writePartitionDir]] calls would recompute
-    * the upstream once per partition), then every staged
-    * `partCol=value` directory is swapped into place through the same
-    * backup-rename protocol. Atomicity is PER PARTITION, as with every
-    * other entry point here: a crash mid-commit leaves each partition
-    * either old or new plus `_tmp`/`_old` litter that [[repair]] reaps
-    * (the staging dir's `_tmp` suffix makes it reapable too).
+    * `df` is staged ONCE ([[stagePartitioned]]: one pipeline evaluation
+    * however many partitions exist), then every staged `partCol=value`
+    * directory is swapped into place. Atomicity is PER PARTITION, as
+    * with every other entry point here: a crash mid-commit leaves each
+    * partition either old or new plus `_tmp`/`_old` litter that
+    * [[repair]] reaps (the staging dir's `_tmp` suffix makes it
+    * reapable too).
     *
     * The commit REPLACES the table: pre-existing `partCol=value`
     * directories absent from the new relation are removed after every
@@ -362,22 +310,9 @@ class AtomicPartitionWriter(fsOps: LakeFs, spark: SparkSession) {
     * Returns committed paths keyed by partition value.
     */
   def commitPartitioned(df: DataFrame, tableDir: String,
-      partCol: String): Map[String, String] = withCommitLease(tableDir) {
-    val staging = s"$tableDir/${partCol}_stage_tmp"
-    try {
-      df.write.mode("overwrite").partitionBy(partCol).parquet(staging)
-      val parts = fsOps.fs
-        .listStatus(new org.apache.hadoop.fs.Path(staging))
-        .filter(_.isDirectory)
-        .map(_.getPath.getName)
-        .filter(_.startsWith(s"$partCol="))
-        .sorted
-      val committed = parts.map { p =>
-        val fin = s"$tableDir/$p"
-        swap(s"$staging/$p", fin, s"$tableDir/${p}_old")
-        if (fsOps.exists(s"$tableDir/${p}_old")) fsOps.delete(s"$tableDir/${p}_old")
-        p.stripPrefix(s"$partCol=") -> fin
-      }.toMap
+      partCol: String): Map[String, String] =
+    stagePartitioned(df, tableDir, partCol, "stage_tmp") { (staging, parts) =>
+      val committed = swapStaged(staging, tableDir, partCol, parts)
       val newSet = parts.toSet
       fsOps.fs.listStatus(new org.apache.hadoop.fs.Path(tableDir))
         .filter(_.isDirectory)
@@ -386,147 +321,139 @@ class AtomicPartitionWriter(fsOps: LakeFs, spark: SparkSession) {
           !n.endsWith("_old") && !n.endsWith("_tmp"))
         .foreach(n => fsOps.delete(s"$tableDir/$n"))
       committed
-    } finally {
-      if (fsOps.exists(staging)) fsOps.delete(staging)
     }
-  }
 
-  /** [[commitPartitioned]]'s UPSERT twin: stage `df` once via
-    * `partitionBy(partCol)` and swap each staged partition into place —
-    * but partitions ABSENT from `df` are left untouched (no
-    * removal sweep). This is the delta-commit primitive: an incremental
-    * ingest rewrites only the partitions that received new rows, paying
-    * IO proportional to the touched mass instead of the table. Same
-    * lease, same per-partition atomicity, same `_tmp`/`_old` litter
-    * discipline ([[repair]] reaps a crashed run's leftovers; a crash
-    * mid-upsert leaves each partition either old or new — callers
-    * needing all-or-nothing visibility must version-gate readers, as
-    * [[graft.operators.AnnIndex]] does with its sidecar).
-    */
-  def upsertPartitions(df: DataFrame, tableDir: String,
-      partCol: String): Map[String, String] =
-    upsertPartitionsCounted(df, tableDir, partCol)._1
-
-  /** [[upsertPartitions]] that ALSO returns the total rows staged —
-    * read from the staged parquet FOOTERS between the staging write
-    * and the swaps (driver metadata IO, never a job). Staged rows ARE
-    * the rows the swapped partitions now hold, so callers that used to
-    * pay a separate materialize+count (or a post-commit footer pass
-    * over the committed dirs) get the same number for free.
+  /** [[commitPartitioned]]'s UPSERT twin: stage `df` once and swap each
+    * staged partition into place — but partitions ABSENT from `df` are
+    * left untouched (no removal sweep). This is the delta-commit
+    * primitive: an incremental ingest rewrites only the partitions that
+    * received new rows, paying IO proportional to the touched mass
+    * instead of the table. Same lease, same per-partition atomicity,
+    * same `_tmp`/`_old` litter discipline ([[repair]] reaps a crashed
+    * run's leftovers; a crash mid-upsert leaves each partition either
+    * old or new — callers needing all-or-nothing visibility must
+    * version-gate readers, as [[graft.operators.AnnIndex]] does with its
+    * sidecar).
+    *
+    * Also returns the total rows staged — read from the staged parquet
+    * FOOTERS between the staging write and the swaps (driver metadata
+    * IO, never a job). Staged rows ARE the rows the swapped partitions
+    * now hold, so callers never pay a separate materialize+count.
     */
   def upsertPartitionsCounted(df: DataFrame, tableDir: String,
-      partCol: String): (Map[String, String], Long) = withCommitLease(tableDir) {
-    val staging = s"$tableDir/${partCol}_stage_tmp"
-    try {
-      df.write.mode("overwrite").partitionBy(partCol).parquet(staging)
-      val parts = fsOps.fs
-        .listStatus(new org.apache.hadoop.fs.Path(staging))
-        .filter(_.isDirectory)
-        .map(_.getPath.getName)
-        .filter(_.startsWith(s"$partCol="))
-        .sorted
-      val rows = stagedRows(staging, parts.toSeq)
-      val committed = parts.map { p =>
-        val fin = s"$tableDir/$p"
-        swap(s"$staging/$p", fin, s"$tableDir/${p}_old")
-        if (fsOps.exists(s"$tableDir/${p}_old"))
-          fsOps.delete(s"$tableDir/${p}_old")
-        p.stripPrefix(s"$partCol=") -> fin
-      }.toMap
-      (committed, rows)
-    } finally {
-      if (fsOps.exists(staging)) fsOps.delete(staging)
+      partCol: String): (Map[String, String], Long) =
+    stagePartitioned(df, tableDir, partCol, "stage_tmp") { (staging, parts) =>
+      val rows = stagedRows(staging, parts)
+      (swapStaged(staging, tableDir, partCol, parts), rows)
     }
-  }
-
-  /** Total record count across the staged partition dirs, from parquet
-    * footer metadata only (overlapped driver IO — the same discipline
-    * as the lifecycle operators' footer counts; never a Spark job).
-    */
-  private def stagedRows(staging: String, parts: Seq[String]): Long = {
-    val conf = spark.sessionState.newHadoopConf()
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    import scala.concurrent.duration.Duration
-    Await.result(Future.traverse(parts) { p => Future {
-      val dir = new org.apache.hadoop.fs.Path(s"$staging/$p")
-      fsOps.fs.listStatus(dir)
-        .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
-        .map { st =>
-          val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-            org.apache.parquet.hadoop.util.HadoopInputFile
-              .fromPath(st.getPath, conf))
-          try r.getRecordCount finally r.close()
-        }.sum
-    }}, Duration.Inf).sum
-  }
 
   /** The APPEND-side delta primitive — the write-amplification
-    * mitigation [[upsertPartitions]]'s wholesale-bucket swap demands at
-    * high ingest rates: stage `df` once via `partitionBy(partCol)`,
-    * then MOVE each staged partition's data files INTO the existing
-    * live partition directory under stage-unique names. Kept rows are
-    * never rewritten — IO ∝ the delta alone, not the touched buckets'
-    * occupancy — at the cost of one extra file per touched partition
-    * per append (callers bound that with a file-count-threshold
-    * compaction pass; [[graft.operators.AnnIndex]] grades both sides).
+    * mitigation [[upsertPartitionsCounted]]'s wholesale-bucket swap
+    * demands at high ingest rates: stage `df` once, then MOVE each
+    * staged partition's data files INTO the existing live partition
+    * directory under stage-unique names. Kept rows are never rewritten
+    * — IO ∝ the delta alone, not the touched buckets' occupancy — at
+    * the cost of one extra file per touched partition per append
+    * (callers bound that with a file-count-threshold compaction pass;
+    * [[graft.operators.AnnIndex]] grades both sides).
     *
     * Atomicity is PER FILE, not per partition: a crash mid-append
     * leaves whole files (rename is atomic), possibly a partial subset
     * of the staged set — readers gating on a version sidecar never see
     * the half-applied append as current, and a replayed append is made
     * row-idempotent by the caller's anti-join against existing
-    * members, the same contract as [[upsertPartitions]]' delta chain.
-    * Returns data files appended per partition value.
-    */
-  def appendPartitions(df: DataFrame, tableDir: String,
-      partCol: String): Map[String, Int] =
-    appendPartitionsCounted(df, tableDir, partCol)._1
-
-  /** [[appendPartitions]] that ALSO returns the total rows staged (from
-    * the staged footers, as in [[upsertPartitionsCounted]]) — staged
-    * rows ARE the rows the append moves into the live partitions, so
-    * callers no longer materialize the delta just to count it.
+    * members, the same contract as the upsert's delta chain. Every
+    * file move re-checks the lease ([[fenceLease]]). Returns data files
+    * appended per partition value, and the total rows staged (from the
+    * staged footers, as in [[upsertPartitionsCounted]]).
     */
   def appendPartitionsCounted(df: DataFrame, tableDir: String,
-      partCol: String): (Map[String, Int], Long) = withCommitLease(tableDir) {
-    val staging = s"$tableDir/${partCol}_append_tmp"
-    val stamp = java.util.UUID.randomUUID().toString.take(8)
+      partCol: String): (Map[String, Int], Long) =
+    stagePartitioned(df, tableDir, partCol, "append_tmp") { (staging, parts) =>
+      val stamp = java.util.UUID.randomUUID().toString.take(8)
+      val rows = stagedRows(staging, parts)
+      val appended = parts.map { p =>
+        val fin = s"$tableDir/$p"
+        fsOps.mkdirs(fin)
+        val files = fsOps.fs
+          .listStatus(new org.apache.hadoop.fs.Path(s"$staging/$p"))
+          .filter(_.isFile)
+          .map(_.getPath.getName)
+          .filter(n => !n.startsWith("_") && !n.startsWith("."))
+          .sorted
+        files.zipWithIndex.foreach { case (f, i) =>
+          fenceLease()
+          if (!fsOps.rename(s"$staging/$p/$f", s"$fin/append-$stamp-$i-$f"))
+            throw new IllegalStateException(
+              s"append rename failed: $staging/$p/$f -> $fin")
+        }
+        p.stripPrefix(s"$partCol=") -> files.length
+      }.toMap
+      (appended, rows)
+    }
+
+  /** The stage-and-list step of the partitioned commits: under the
+    * table's lease, write `df` ONCE via `partitionBy(partCol)` into
+    * `<tableDir>/<partCol>_<suffix>`, list the staged `partCol=value`
+    * dirs (sorted), and hand both to `commit`. The staging dir is
+    * deleted afterwards whatever `commit` did.
+    */
+  private def stagePartitioned[T](df: DataFrame, tableDir: String,
+      partCol: String, suffix: String)(
+      commit: (String, Seq[String]) => T): T = withCommitLease(tableDir) {
+    val staging = s"$tableDir/${partCol}_$suffix"
     try {
       df.write.mode("overwrite").partitionBy(partCol).parquet(staging)
-      val parts = fsOps.fs
+      commit(staging, fsOps.fs
         .listStatus(new org.apache.hadoop.fs.Path(staging))
         .filter(_.isDirectory)
         .map(_.getPath.getName)
         .filter(_.startsWith(s"$partCol="))
-        .sorted
-      val rows = stagedRows(staging, parts.toSeq)
-      val appended = parts.map { p =>
-          val fin = s"$tableDir/$p"
-          fsOps.mkdirs(fin)
-          val files = fsOps.fs
-            .listStatus(new org.apache.hadoop.fs.Path(s"$staging/$p"))
-            .filter(_.isFile)
-            .map(_.getPath.getName)
-            .filter(n => !n.startsWith("_") && !n.startsWith("."))
-            .sorted
-          files.zipWithIndex.foreach { case (f, i) =>
-            heldLease.get().foreach { case (lp, token) =>
-              if (!ownsLease(lp, token))
-                throw new AtomicPartitionWriter.LeaseLostException(
-                  lp.stripSuffix("/_commit_lease"))
-            }
-            if (!fsOps.rename(s"$staging/$p/$f", s"$fin/append-$stamp-$i-$f"))
-              throw new IllegalStateException(
-                s"append rename failed: $staging/$p/$f -> $fin")
-          }
-          p.stripPrefix(s"$partCol=") -> files.length
-        }.toMap
-      (appended, rows)
-    } finally {
-      if (fsOps.exists(staging)) fsOps.delete(staging)
-    }
+        .sorted.toSeq)
+    } finally deleteIfExists(staging)
   }
+
+  /** Swap every staged `partCol=value` dir into `tableDir`, in order;
+    * committed paths keyed by partition value.
+    */
+  private def swapStaged(staging: String, tableDir: String, partCol: String,
+      parts: Seq[String]): Map[String, String] =
+    parts.map { p =>
+      p.stripPrefix(s"$partCol=") ->
+        swapIn(s"$staging/$p", s"$tableDir/$p", s"$tableDir/${p}_old")()
+    }.toMap
+
+  /** Total record count across the staged partition dirs, from parquet
+    * footer metadata only ([[Footers]]; never a Spark job).
+    */
+  private def stagedRows(staging: String, parts: Seq[String]): Long =
+    Footers.counts(spark, parts.map(p => s"$staging/$p")).map(_._2).sum
+
+  /** One partition's commit: [[swap]] `tmp` into `fin`, run `sync`
+    * BEFORE deleting the backup — a crash during the metastore sync
+    * must leave `_old` for recovery (crash-matrix contract) — then
+    * delete the backup. Returns `fin`.
+    */
+  private def swapIn(tmp: String, fin: String, old: String)(
+      sync: => Unit = ()): String = {
+    swap(tmp, fin, old)
+    sync
+    deleteIfExists(old)
+    fin
+  }
+
+  private def deleteIfExists(path: String): Unit =
+    if (fsOps.exists(path)) fsOps.delete(path)
+
+  /** Abort with [[AtomicPartitionWriter.LeaseLostException]] unless the
+    * calling thread still owns the lease it took in [[withCommitLease]].
+    */
+  private def fenceLease(): Unit =
+    heldLease.get().foreach { case (lp, token) =>
+      if (!ownsLease(lp, token))
+        throw new AtomicPartitionWriter.LeaseLostException(
+          lp.stripSuffix("/_commit_lease"))
+    }
 
   /** The rename dance with rollback (reference `_hdfs_swap`,
     * `jobs/utils/retry.py:130-165`). Before touching anything it
@@ -539,14 +466,10 @@ class AtomicPartitionWriter(fsOps: LakeFs, spark: SparkSession) {
     * cost of one tiny-file read each.
     */
   private[lake] def swap(tmp: String, fin: String, old: String): Unit = {
-    heldLease.get().foreach { case (lp, token) =>
-      if (!ownsLease(lp, token))
-        throw new AtomicPartitionWriter.LeaseLostException(
-          lp.stripSuffix("/_commit_lease"))
-    }
+    fenceLease()
     val hadBackup = fsOps.exists(fin)
     if (hadBackup) {
-      if (fsOps.exists(old)) fsOps.delete(old) // stale backup from a crash
+      deleteIfExists(old) // stale backup from a crash
       if (!fsOps.rename(fin, old))
         throw new IllegalStateException(s"backup rename failed: $fin -> $old")
     }

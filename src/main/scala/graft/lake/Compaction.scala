@@ -120,35 +120,6 @@ object Compaction {
     s"/tmp/graft_q156_lake/${spark.sparkContext.applicationId}/" +
       new java.io.File(dir).getName
 
-  /** (file count, footer row count) per partition dir, in TWO flat
-    * parallel fan-outs: list every dir concurrently, then open every
-    * footer across ALL dirs concurrently. The previous per-partition
-    * outer loop serialized one parallel batch per year — at 7 years ×
-    * 16 files the audits spent ~3 s of pure driver wall on IO that
-    * flattens to one round-trip-bounded wave (TimeLab `jobs`, r17:
-    * q156 warm was 4.15 s with 1.08 s of executed jobs).
-    */
-  private def footerCounts(lakeFs: LakeFs,
-      conf: org.apache.hadoop.conf.Configuration,
-      partDirs: Seq[String]): Map[String, (Long, Long)] = {
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    import scala.concurrent.duration.Duration
-    val withFiles = Await.result(Future.traverse(partDirs) { d => Future {
-        d -> lakeFs.lsRecursive(d).filter(_.endsWith(".parquet"))
-      }}, Duration.Inf)
-    val counts = Await.result(
-      Future.traverse(withFiles.flatMap(_._2)) { f => Future {
-        val in = org.apache.parquet.hadoop.util.HadoopInputFile
-          .fromPath(new Path(f), conf)
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-        try f -> r.getRecordCount finally r.close()
-      }}, Duration.Inf).toMap
-    withFiles.map { case (d, fs) =>
-      d -> (fs.size.toLong, fs.map(counts).sum)
-    }.toMap
-  }
-
   def planRowsAudit(spark: SparkSession, dir: String): DataFrame = {
     graft.functions.GraftFunctions.ensureRegistered(spark)
     val tableDir = q156StagingDir(spark, dir)
@@ -162,16 +133,14 @@ object Compaction {
           s"CAST(o_orderkey AS STRING), 8) % $SmallFileShards"))
       .repartition(col("year"), col("shard"))
       .write.mode("overwrite").partitionBy("year", "shard").parquet(tableDir)
-    val lakeFs = LakeFs.forSpark(spark)
-    val conf = spark.sparkContext.hadoopConfiguration
-    val parts = new Compaction(lakeFs, spark).plan(tableDir, Long.MaxValue)
+    val parts = new Compaction(LakeFs.forSpark(spark), spark)
+      .plan(tableDir, Long.MaxValue)
       .filter(_.partition.matches(".*year=\\d+$"))
-    val counted = footerCounts(lakeFs, conf, parts.map(_.partition))
-    val rows = parts.map { p =>
-      val (_, nRows) = counted(p.partition)
-      val target = targetFilesFor(nRows, RowsPerFileTarget)
-      (p.partition.replaceAll(".*year=", "").toLong,
-        p.nFiles.toLong, nRows, target, p.nFiles > target)
+    val rows = parts.zip(Footers.counts(spark, parts.map(_.partition))).map {
+      case (p, (_, nRows)) =>
+        val target = targetFilesFor(nRows, RowsPerFileTarget)
+        (p.partition.replaceAll(".*year=", "").toLong,
+          p.nFiles.toLong, nRows, target, p.nFiles > target)
     }
     spark.createDataFrame(rows)
       .toDF("year", "n_files", "n_rows", "target_files", "worth_compacting")
@@ -196,7 +165,7 @@ object Compaction {
     *
     * Scale: per-partition rewrites are independent jobs over one
     * partition's data each; listing and footer reads are driver-side
-    * metadata IO (overlapped futures, the q156 lesson); the checksum
+    * metadata IO (one bounded fan-out, the q156 lesson); the checksum
     * pass is one scan of the compacted table.
     */
   def execRowsAudit(spark: SparkSession, dir: String): DataFrame = {
@@ -210,21 +179,19 @@ object Compaction {
       .repartition(col("year"), col("shard"))
       .write.mode("overwrite").partitionBy("year", "shard").parquet(tableDir)
     val lakeFs = LakeFs.forSpark(spark)
-    val conf = spark.sparkContext.hadoopConfiguration
     val writer = new AtomicPartitionWriter(lakeFs, spark)
     val years = new Compaction(lakeFs, spark).plan(tableDir, Long.MaxValue)
       .filter(_.partition.matches(".*year=\\d+$"))
       .map(_.partition.replaceAll(".*year=", "").toLong)
     // pre-counts first (driver metadata IO, one flat fan-out across
-    // every year — see footerCounts), then ALL year rewrites staged as
-    // overlapping jobs under one lease (guide §2.6 — the serial
+    // every year — see Footers.counts), then ALL year rewrites staged
+    // as overlapping jobs under one lease (guide §2.6 — the serial
     // per-year write paid one full job latency per partition), then
     // post-counts: same per-year panel, ~1/4 the wall clock
-    val preCounts = footerCounts(lakeFs, conf,
-      years.map(y => s"$tableDir/year=$y"))
-    val pre = years.map { y =>
-      val (filesBefore, nRows) = preCounts(s"$tableDir/year=$y")
-      (y, filesBefore, nRows, targetFilesFor(nRows, RowsPerFileTarget))
+    val yearDirs = years.map(y => s"$tableDir/year=$y")
+    val pre = years.zip(Footers.counts(spark, yearDirs)).map {
+      case (y, (filesBefore, nRows)) =>
+        (y, filesBefore, nRows, targetFilesFor(nRows, RowsPerFileTarget))
     }
     // rewrite keeps `shard` as a plain data column so the compacted
     // table has ONE uniform layout (year=... dirs of flat files)
@@ -233,11 +200,9 @@ object Compaction {
         y.toInt -> spark.read.parquet(s"$tableDir/year=$y")
           .repartition(target.toInt)
       }, tableDir)
-    val postCounts = footerCounts(lakeFs, conf,
-      years.map(y => s"$tableDir/year=$y"))
-    val panel = pre.map { case (y, filesBefore, nRows, target) =>
-      val (filesAfter, _) = postCounts(s"$tableDir/year=$y")
-      (y, filesBefore, nRows, target, filesAfter)
+    val panel = pre.zip(Footers.counts(spark, yearDirs)).map {
+      case ((y, filesBefore, nRows, target), (filesAfter, _)) =>
+        (y, filesBefore, nRows, target, filesAfter)
     }
     val checks = spark.read.parquet(tableDir)
       .groupBy(col("year"))

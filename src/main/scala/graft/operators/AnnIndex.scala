@@ -349,44 +349,19 @@ object AnnIndex {
         (0 until Similarity.PqSubspaces)
           .map(m => Similarity.pqCode(m).as(s"code_$m")): _*)
 
-  /** Total committed row count across parquet data files under `dirs`,
-    * from FOOTER metadata only (overlapped driver IO, the q156 lesson)
-    * — never a scan job. The upsert/commit protocols return exactly the
-    * directories they swapped, so counts the write itself already
-    * proved (rows staged = rows committed) are re-derived for free
-    * instead of re-running the staged pipeline a second time.
-    */
-  private def footerRows(spark: SparkSession, dirs: Iterable[String]): Long = {
-    val conf = spark.sessionState.newHadoopConf()
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    import scala.concurrent.duration.Duration
-    Await.result(Future.traverse(dirs.toSeq) { d => Future {
-      val p = new org.apache.hadoop.fs.Path(d)
-      val fs = p.getFileSystem(conf)
-      fs.listStatus(p)
-        .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
-        .map { st =>
-          val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-            org.apache.parquet.hadoop.util.HadoopInputFile
-              .fromPath(st.getPath, conf))
-          try r.getRecordCount finally r.close()
-        }.sum
-    }}, Duration.Inf).sum
-  }
-
-  /** [[footerRows]] over every `bucket=<long>` partition of a committed
-    * table — the table's exact row count from metadata only, for
-    * witnesses that need the count but not a checksum.
+  /** Total row count over every `bucket=<long>` partition of a
+    * committed table, from parquet FOOTER metadata only
+    * ([[graft.lake.Footers]]) — never a scan job — for witnesses that
+    * need the count but not a checksum.
     */
   private def footerRowsUnder(spark: SparkSession,
       lakeFs: graft.lake.LakeFs, tableDir: String): Long =
-    footerRows(spark,
+    graft.lake.Footers.counts(spark,
       lakeFs.fs.listStatus(new org.apache.hadoop.fs.Path(tableDir))
         .filter(_.isDirectory)
         .map(_.getPath.getName)
         .filter(n => BucketDirName.pattern.matcher(n).matches())
-        .map(n => s"$tableDir/$n"))
+        .map(n => s"$tableDir/$n").toSeq).map(_._2).sum
 
   /** The touched-bucket histogram of a routed delta in ONE job:
     * (bucket, rows) collected off a ≤ nlist-group aggregation — the
@@ -405,7 +380,7 @@ object AnnIndex {
     * lowest-base-id seeds), then the fresh arrivals (≥ 0.9) are
     * assigned + PQ-coded with the COMMITTED model — one map-only pass
     * over the DELTA only — and committed per bucket through
-    * [[graft.lake.AtomicPartitionWriter.upsertPartitions]]: only
+    * [[graft.lake.AtomicPartitionWriter.upsertPartitionsCounted]]: only
     * buckets that received arrivals rewrite (IO ∝ touched mass, never
     * the table; the touched set is nlist-bounded, ≤ √N literals in the
     * pruning filter), untouched buckets' files never move, and the
@@ -484,7 +459,7 @@ object AnnIndex {
   /** The delta-commit primitive shared by q248/q249/q250/q251: assign +
     * PQ-code `delta` with the COMMITTED model (one map-only pass over
     * the delta only), then rewrite ONLY the buckets that received
-    * arrivals via [[graft.lake.AtomicPartitionWriter.upsertPartitions]]
+    * arrivals via [[graft.lake.AtomicPartitionWriter.upsertPartitionsCounted]]
     * — IO ∝ touched mass, never the table; the touched set is
     * nlist-bounded (≤ √N literals in the pruning filter); untouched
     * buckets' files never move. REPLAY-IDEMPOTENT: existing rows with
@@ -517,7 +492,7 @@ object AnnIndex {
     val ((_, nRewritten), _) = graft.util.Par.pair(
       writer.upsertPartitionsCounted(
         keptMembers.unionByName(dm), membersDir(root), "bucket"),
-      writer.upsertPartitions(
+      writer.upsertPartitionsCounted(
         bucketTable(spark, codesDir(root))
           .filter(col("bucket").isin(touched: _*))
           .join(dm.select(col("vec_id")), Seq("vec_id"), "left_anti")
@@ -1417,7 +1392,7 @@ object AnnIndex {
           val kept = bucketTable(spark, membersDir(root))
             .filter(col("bucket").isin(touched: _*))
             .join(dm.select(col("vec_id")), Seq("vec_id"), "left_anti")
-          writer.upsertPartitions(kept.unionByName(dm),
+          writer.upsertPartitionsCounted(kept.unionByName(dm),
             membersDir(root), "bucket")
           dm.unpersist()
           writeHierSidecar(lakeFs, root, HierMeta(IndexVersion,
@@ -1508,7 +1483,7 @@ object AnnIndex {
     * q250 measured that the wholesale-bucket upsert rewrites ~10× its
     * arrivals per ~10% wave (at √N buckets a wave touches nearly every
     * bucket). This panel runs the SAME 3-wave shape through
-    * [[graft.lake.AtomicPartitionWriter.appendPartitions]]: each wave
+    * [[graft.lake.AtomicPartitionWriter.appendPartitionsCounted]]: each wave
     * assigns its delta with the committed model (map-only, the q248
     * discipline), anti-joins replayed rows out, and APPENDS one file
     * per touched bucket — rows written ∝ arrivals, amplification ppm
@@ -1703,7 +1678,7 @@ object AnnIndex {
     val ((_, nRewritten), _) = graft.util.Par.pair(
       writer.upsertPartitionsCounted(
         keptMembers.unionByName(dm), membersDir(root), "bucket"),
-      writer.upsertPartitions(
+      writer.upsertPartitionsCounted(
         bucketTable(spark, codesDir(root))
           .filter(col("bucket").isin(touched: _*))
           .join(dm.select(col("vec_id")), Seq("vec_id"), "left_anti")
@@ -2069,9 +2044,9 @@ object AnnIndex {
     // per table instead of freeze + count + append): the staging write
     // reads the pre-append table state — renames happen only after
     // staging completes — and rows appended = rows staged, read off
-    // the staged footers (driver metadata IO, the q156/footerRows
-    // discipline). repartition(bucket) still pins one file per touched
-    // bucket per wave — the file-count law the panel grades.
+    // the staged footers (driver metadata IO, graft.lake.Footers).
+    // repartition(bucket) still pins one file per touched bucket per
+    // wave — the file-count law the panel grades.
     val (nAppended, nCodeAppended) = graft.util.Par.pair(
       writer.appendPartitionsCounted(
         dm.join(
@@ -2151,7 +2126,7 @@ object AnnIndex {
       .repartition(col("bucket"))
       .localCheckpoint()
     val nTorn = tornM.count()
-    writer.appendPartitions(tornM, membersDir(root), "bucket")
+    writer.appendPartitionsCounted(tornM, membersDir(root), "bucket")
     // the at-least-once replay of the SAME wave through the real body
     val s = appendWave(spark, root, delta, b, writer, lakeFs)
     val members = bucketTable(spark, membersDir(root))

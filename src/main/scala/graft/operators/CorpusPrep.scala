@@ -443,20 +443,17 @@ object CorpusPrep {
     * executed jobs. The checkpointed relations are vocab-bounded
     * (megabytes at a terabyte corpus) and `top` is one row, so the
     * materialization is cheap at any scale and bounds lineage for
-    * arbitrary `steps`. `graft.bpe.roundCheckpoint=false` restores the
-    * lazy chain (kept for the within-session A/B instrument).
+    * arbitrary `steps` (the lazy chain's plans are kept in
+    * `plans/r17/q174_bpe_merges_before.txt`).
     */
   private def bpeMergeStep(syms: DataFrame, step: Int): (DataFrame, DataFrame) = {
-    val ckpt: DataFrame => DataFrame =
-      if (syms.sparkSession.conf.get("graft.bpe.roundCheckpoint", "true")
-          == "true") _.localCheckpoint()
-      else identity
     val wWord = Window.partitionBy("word").orderBy("pos")
     val withNext = syms.withColumn("nxt", lead(col("sym"), 1).over(wWord))
-    val top = ckpt(withNext.filter(col("nxt").isNotNull)
+    val top = withNext.filter(col("nxt").isNotNull)
       .groupBy(col("sym").as("a"), col("nxt").as("b"))
       .agg(sum(col("w_cnt")).as("cnt"))
-      .orderBy(col("cnt").desc, col("a"), col("b")).limit(1))
+      .orderBy(col("cnt").desc, col("a"), col("b")).limit(1)
+      .localCheckpoint()
     val marked = withNext.crossJoin(broadcast(top))
       .withColumn("marked",
         when(col("sym") === col("a") && col("nxt") === col("b"), 1L)
@@ -476,14 +473,15 @@ object CorpusPrep {
           (col("pos") - col("run_start")) % 2 === 0, 1L).otherwise(0L))
       .withColumn("prev_active",
         coalesce(lag(col("active"), 1).over(wWord), lit(0L)))
-    val rebuilt = ckpt(active
+    val rebuilt = active
       .filter(col("prev_active") === 0L)
       .select(col("word"), col("w_cnt"), col("pos").as("opos"),
         when(col("active") === 1L, concat(col("sym"), col("nxt")))
           .otherwise(col("sym")).as("sym"))
       .withColumn("pos", row_number().over(
         Window.partitionBy("word").orderBy("opos")).cast("long"))
-      .drop("opos"))
+      .drop("opos")
+      .localCheckpoint()
     val stats = top.crossJoin(
       broadcast(rebuilt.agg(sum(col("w_cnt")).as("n_symbols_after"))))
       .select(lit(step.toLong).as("step"), col("a").as("sym_a"),

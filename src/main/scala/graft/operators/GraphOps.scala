@@ -31,7 +31,7 @@ import graft.sources.Tables
   *    and persisted across iterations (MEMORY_AND_DISK; spill-safe).
   *  - The rank relation is NODE-sized. While the node count is under
   *    [[DefaultBroadcastNodeLimit]] (overridable per call or via
-  *    `graft.pagerank.broadcastNodeLimit`), each iteration broadcasts
+  *    `graft.graph.broadcastNodeLimit`), each iteration broadcasts
   *    it into the edge scan (explicit `broadcast` hint), so the edges
   *    are never re-shuffled: per iteration one broadcast + one partial
   *    (map-side) sum keyed by `dst`. Above the limit an unconditional
@@ -73,16 +73,24 @@ object GraphOps {
     * 50 M nodes of (long, long) is ~800 MB hashed on the driver — the
     * edge of sane for a large driver; past it the shuffled form is
     * mandatory. Override per call, or session-wide via the
-    * `graft.graph.broadcastNodeLimit` conf (`graft.pagerank
-    * .broadcastNodeLimit` still wins for pagerank, its original key).
+    * `graft.graph.broadcastNodeLimit` conf ([[broadcastNodeLimitFor]]).
     */
   val DefaultBroadcastNodeLimit = 50000000L
 
+  /** The node-count ceiling every graph operator resolves: the explicit
+    * limit, else the `graft.graph.broadcastNodeLimit` conf, else
+    * [[DefaultBroadcastNodeLimit]].
+    */
+  private def broadcastNodeLimitFor(spark: SparkSession,
+      broadcastNodeLimit: Option[Long]): Long =
+    broadcastNodeLimit.getOrElse(
+      spark.conf.get("graft.graph.broadcastNodeLimit",
+        DefaultBroadcastNodeLimit.toString).toLong)
+
   /** The family-wide broadcast-vs-merge plan switch (q154's guard,
     * shared by triangles and link prediction): TRUE while the node
-    * relation's EXACT row count is at or under the explicit limit /
-    * the `graft.graph.broadcastNodeLimit` conf /
-    * [[DefaultBroadcastNodeLimit]]. Decided from a real count, never
+    * relation's EXACT row count is at or under
+    * [[broadcastNodeLimitFor]]. Decided from a real count, never
     * optimizer size estimates, so tiny test graphs and misestimated
     * stats both get the plan the node count demands; above the limit
     * the caller must hint merge joins — on a power-law 100 TB graph
@@ -92,10 +100,7 @@ object GraphOps {
   private[operators] def nodeBroadcastOk(nodes: DataFrame,
       broadcastNodeLimit: Option[Long],
       allowCount: Boolean = true): Boolean = {
-    val spark = nodes.sparkSession
-    val lim = broadcastNodeLimit.getOrElse(
-      spark.conf.get("graft.graph.broadcastNodeLimit",
-        DefaultBroadcastNodeLimit.toString).toLong)
+    val lim = broadcastNodeLimitFor(nodes.sparkSession, broadcastNodeLimit)
     // no job when the answer doesn't need one: a non-positive limit is
     // the forced-merge posture (the plan-shape tests' Some(0L)), and a
     // materialize=false caller asked for a LAZY plan — running a real
@@ -113,9 +118,9 @@ object GraphOps {
     *
     * `broadcastNodeLimit`: explicit node-count ceiling for the
     * broadcast plan (tests pass `Some(0)` to force the shuffled plan);
-    * `None` reads `graft.pagerank.broadcastNodeLimit`, defaulting to
-    * [[DefaultBroadcastNodeLimit]]. Both plans execute the identical
-    * integer contract — GraphOpsSpec asserts byte-identical ranks.
+    * `None` resolves it as [[broadcastNodeLimitFor]] does. Both plans
+    * execute the identical integer contract — GraphOpsSpec asserts
+    * byte-identical ranks.
     *
     * `checkpointDir`: lineage truncation for the materialized result —
     * `None` uses `localCheckpoint()` (single-JVM tests/bench; blocks
@@ -140,10 +145,7 @@ object GraphOps {
       broadcastNodeLimit: Option[Long] = None,
       checkpointDir: Option[String] = None): DataFrame = {
     val spark = edges.sparkSession
-    val bcLimit = broadcastNodeLimit.getOrElse(
-      spark.conf.get("graft.pagerank.broadcastNodeLimit",
-        spark.conf.get("graft.graph.broadcastNodeLimit",
-          DefaultBroadcastNodeLimit.toString)).toLong)
+    val bcLimit = broadcastNodeLimitFor(spark, broadcastNodeLimit)
     // cache the edge relation FIRST: the out-degree aggregate and the
     // annotated edge relation both derive from it, so the (expensive)
     // edge-building pipeline upstream runs exactly once

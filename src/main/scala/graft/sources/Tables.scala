@@ -72,20 +72,6 @@ object Tables {
     * `_version.json` sidecar the lake layer already maintains).
     */
   def rowCountFromFooters(spark: SparkSession, dir: String, name: String): Long =
-    rowCountCache.getOrElseUpdate(s"$dir/$name.parquet", {
-      val conf = spark.sessionState.newHadoopConf()
-      val root = new org.apache.hadoop.fs.Path(s"$dir/$name.parquet")
-      val fs = root.getFileSystem(conf)
-      def dataFiles(p: org.apache.hadoop.fs.Path): Seq[org.apache.hadoop.fs.Path] = {
-        val st = fs.getFileStatus(p)
-        if (st.isDirectory) fs.listStatus(p).toSeq.flatMap(s => dataFiles(s.getPath))
-        else if (st.getPath.getName.endsWith(".parquet")) Seq(st.getPath)
-        else Seq.empty
-      }
-      dataFiles(root).map { f =>
-        val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(f, conf))
-        try reader.getRecordCount finally reader.close()
-      }.sum
-    })
+    rowCountCache.getOrElseUpdate(s"$dir/$name.parquet",
+      graft.lake.Footers.counts(spark, Seq(s"$dir/$name.parquet")).head._2)
 }

@@ -21,7 +21,7 @@ object PlanDump {
       sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     spark.sparkContext.setLogLevel("ERROR")
     // optional runtime-conf overrides (k=v,k=v) — lets a "before" dump
-    // flip an operator's A/B knob (e.g. graft.bpe.roundCheckpoint)
+    // flip a session conf
     sys.env.get("SPARK_GRAFT_PLANDUMP_CONF").foreach {
       _.split(",").map(_.trim).filter(_.contains("=")).foreach { kv =>
         val Array(k, v) = kv.split("=", 2)

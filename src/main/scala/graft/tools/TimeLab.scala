@@ -54,26 +54,6 @@ object TimeLab {
       spark.stop()
       return
     }
-    // `annbudget` mode: per-query serving cost at a FIXED query budget
-    // (1000 queries regardless of corpus size) through the derived-knob
-    // searches — the production scaling claim the graded q106/q108
-    // cannot make because their query set grows with the corpus.
-    if (args.length > 1 && args(1) == "annbudget") {
-      import graft.operators.Similarity
-      val n = Tables.embeddings(spark, dir).count()
-      val nlist = Similarity.nlistFor(n)
-      val nprobe = Similarity.nprobeFor(nlist)
-      val k = Similarity.pqKFor(n)
-      println(s"[timelab] corpus n=$n derived nlist=$nlist nprobe=$nprobe k=$k")
-      for (_ <- 1 to 2) {
-        cnt("ivf search 1000q", Similarity.ivfKnnFor(spark, dir, nlist, nprobe,
-          queryBudget = Some(1000L)))
-        cnt("ivfpq search 1000q", Similarity.ivfPqSearchFor(spark, dir, nlist, nprobe, k,
-          queryBudget = Some(1000L)))
-      }
-      spark.stop()
-      return
-    }
     // `jobs` mode: run ONE declared query with a SparkListener that
     // prints every job's description, duration and task count — the
     // lifecycle queries are dozens of small sequential jobs and this
@@ -114,7 +94,8 @@ object TimeLab {
       return
     }
     // `confab` mode: within-ONE-session A/B of an arbitrary RUNTIME
-    // SQLConf over a set of queries (the smjab generalization).
+    // SQLConf over a set of queries (e.g.
+    // spark.sql.join.preferSortMergeJoin=true,false).
     // Usage: TimeLab <sfDir> confab <confKey> <v1,v2[,...]> q1+q2+...
     if (args.length > 4 && args(1) == "confab") {
       val key = args(2)
@@ -141,36 +122,6 @@ object TimeLab {
       vals.foreach { v =>
         println(f"[timelab-confab] TOTAL $v=${names.map(q => acc((q, v))).sum}%6.2f")
       }
-      spark.stop()
-      return
-    }
-    // `smjab` mode: within-ONE-session A/B of
-    // spark.sql.join.preferSortMergeJoin over a set of queries — the
-    // conf is a runtime SQLConf, so flipping it per pass isolates the
-    // join-strategy effect from JVM/JIT/session variance that two
-    // separate sbt runs cannot. Usage: TimeLab <sfDir> smjab q1+q2+...
-    if (args.length > 2 && args(1) == "smjab") {
-      val names = args(2).split("\\+").toSeq
-      // absorb codegen/JIT: one untimed pass per query with each conf
-      for (v <- Seq("true", "false"); q <- names) {
-        spark.conf.set("spark.sql.join.preferSortMergeJoin", v)
-        graft.SparkEntry.queries(q)(spark, dir)
-          .write.format("noop").mode("overwrite").save()
-      }
-      val acc = scala.collection.mutable.Map.empty[(String, String), Double]
-      for (round <- 1 to 2; v <- Seq("true", "false"); q <- names) {
-        spark.conf.set("spark.sql.join.preferSortMergeJoin", v)
-        val t0 = System.nanoTime()
-        graft.SparkEntry.queries(q)(spark, dir)
-          .write.format("noop").mode("overwrite").save()
-        val t = (System.nanoTime() - t0) / 1e9
-        acc((q, v)) = math.min(acc.getOrElse((q, v), Double.MaxValue), t)
-      }
-      names.foreach { q =>
-        println(f"[timelab-smjab] $q%-30s smj=${acc((q, "true"))}%6.3f shj=${acc((q, "false"))}%6.3f")
-      }
-      println(f"[timelab-smjab] TOTAL smj=${names.map(q => acc((q, "true"))).sum}%6.2f " +
-        f"shj=${names.map(q => acc((q, "false"))).sum}%6.2f")
       spark.stop()
       return
     }

@@ -111,6 +111,61 @@ class LakeSpec extends AnyFunSuite {
     assert(spark.read.parquet(s"$table/year=2023").count() == 2)
   }
 
+  test("writeYears: a staging failure in one partition leaves no _tmp, swaps nothing, frees the lease") {
+    val table = tmpDir()
+    val fs = fsOps
+    val w = new AtomicPartitionWriter(fs, spark)
+    w.write(writeDf(9), table, 2024)
+    val poisoned = writeDf(4).withColumn("id", org.apache.spark.sql.functions
+      .expr("IF(id >= 0, CAST(raise_error('staging boom') AS INT), id)"))
+    val e = intercept[Exception] {
+      w.writeYears(
+        Seq(2023 -> writeDf(3), 2024 -> writeDf(7), 2025 -> poisoned), table)
+    }
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(c => String.valueOf(c.getMessage).contains("staging boom")))
+    assert(new java.io.File(table).list().filter(_.endsWith("_tmp")).isEmpty,
+      "every partition's _tmp is deleted")
+    // no partition swapped: the new years never appear, the old one is intact
+    assert(!fs.exists(s"$table/year=2023") && !fs.exists(s"$table/year=2025"))
+    assert(spark.read.parquet(s"$table/year=2024").count() == 9)
+    assert(!fs.exists(s"$table/_commit_lease"), "the lease is released")
+    w.write(writeDf(2), table, 2025)
+    assert(spark.read.parquet(s"$table/year=2025").count() == 2)
+  }
+
+  test("upsert and append commits return the row counts they committed") {
+    val table = tmpDir()
+    val w = new AtomicPartitionWriter(fsOps, spark)
+    // several files per staged partition: round-robin over 4 tasks
+    def rel(from: Long, n: Int) =
+      spark.range(from, from + n).selectExpr("id", "id % 3 AS shard").repartition(4)
+    w.commitPartitioned(rel(0L, 12), table, "shard")
+    val delta = rel(100L, 20).filter("shard < 2")
+    val (upserted, nUpserted) = w.upsertPartitionsCounted(delta, table, "shard")
+    assert(nUpserted == delta.count())
+    assert(nUpserted == upserted.values.toSeq.map(spark.read.parquet(_).count()).sum)
+    val before = spark.read.parquet(table).count()
+    val (_, nAppended) = w.appendPartitionsCounted(rel(200L, 9), table, "shard")
+    assert(nAppended == 9L)
+    assert(nAppended == spark.read.parquet(table).count() - before)
+  }
+
+  test("footer reader: files and rows per directory equal a listing and a scan") {
+    val table = s"${tmpDir()}/t"
+    spark.range(0, 500).selectExpr("id", "id % 4 AS part").repartition(5)
+      .write.partitionBy("part").parquet(table)
+    val dirs = (0 until 4).map(p => s"$table/part=$p")
+    val got = Footers.counts(spark, dirs :+ table)
+    dirs.zip(got).foreach { case (d, (files, rows)) =>
+      assert(files > 1, s"$d should hold several files")
+      assert(files == new java.io.File(d).list().count(_.endsWith(".parquet")))
+      assert(rows == spark.read.parquet(d).count())
+    }
+    // the table root counts every file beneath it
+    assert(got.last == ((got.init.map(_._1).sum, 500L)))
+  }
+
   test("two committers racing one table: the second fails fast, state stays whole") {
     val table = tmpDir()
     val fs = fsOps
@@ -185,7 +240,7 @@ class LakeSpec extends AnyFunSuite {
     val before1 = listing(s"$table/shard=1")
     val before2 = listing(s"$table/shard=2")
     // delta: replaces shard=0's content, creates shard=3, names neither 1 nor 2
-    w.upsertPartitions(Seq((10L, 0L), (11L, 3L)).toDF("id", "shard"),
+    w.upsertPartitionsCounted(Seq((10L, 0L), (11L, 3L)).toDF("id", "shard"),
       table, "shard")
     assert(ids(0L) === Set(10L)) // touched: swapped to the delta's content
     assert(ids(3L) === Set(11L)) // new partition created through the swap
@@ -213,7 +268,7 @@ class LakeSpec extends AnyFunSuite {
     val before0 = listing(s"$table/shard=0")
     val before1 = listing(s"$table/shard=1")
     // delta: appends into shard=0, creates shard=3, names neither 1 nor 2
-    val appended = w.appendPartitions(
+    val (appended, _) = w.appendPartitionsCounted(
       Seq((10L, 0L), (11L, 3L)).toDF("id", "shard"), table, "shard")
     assert(appended.keySet === Set("0", "3"))
     // touched partition: old content PLUS the delta — the pre-existing
