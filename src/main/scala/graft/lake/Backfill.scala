@@ -68,11 +68,12 @@ object Backfill {
       .drop("price_ok")
       .repartition(col("year"))
       .write.mode("overwrite").partitionBy("year").parquet(tableDir)
-    // the partition set, from the written files (the REAL lake state,
-    // not the source assumption)
-    val years = lakeFs.lsRecursive(tableDir)
-      .flatMap("year=(\\d+)/".r.findFirstMatchIn(_).map(_.group(1).toLong))
-      .distinct.sorted
+    // the partition set, from the table root's `year=N` directories
+    // (the REAL lake state, not the source assumption)
+    val YearDir = "year=(\\d+)".r
+    val years = lakeFs.fs.listStatus(new org.apache.hadoop.fs.Path(tableDir))
+      .toSeq.filter(_.isDirectory).map(_.getPath.getName)
+      .collect { case YearDir(y) => y.toLong }.sorted
     def sidecar(y: Long) = s"$tableDir/year=$y/_pipeline_version.json"
     years.foreach { y =>
       val v = if (y % 2 == 0) 1L else PipelineVersion

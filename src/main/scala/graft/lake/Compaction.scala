@@ -48,8 +48,8 @@ class Compaction(fs: LakeFs, spark: SparkSession) {
     * `/t`.
     */
   def planPartition(partDir: String, targetBytes: Long): PartitionPlan = {
-    val dataFiles = fs.lsRecursive(partDir).filter(_.endsWith(".parquet"))
-    val bytes = dataFiles.map(f => fs.fs.getFileStatus(new Path(f)).getLen).sum
+    val dataFiles = fs.files(partDir).filter(_.getPath.getName.endsWith(".parquet"))
+    val bytes = dataFiles.map(_.getLen).sum
     PartitionPlan(
       new Path(partDir).toUri.getPath, dataFiles.size, bytes,
       math.max(1, math.ceil(bytes.toDouble / targetBytes).toInt))

@@ -19,22 +19,18 @@ object Footers {
   private val Width = Runtime.getRuntime.availableProcessors()
 
   /** (data files, rows) per directory of `dirs`, in order, over every
-    * `.parquet` file beneath it (a file path counts itself). Two flat
-    * fan-outs of width [[Width]]: every directory listed, then
-    * every footer across ALL directories opened — a per-directory outer
-    * loop would serialize one footer wave per partition.
+    * `.parquet` file beneath it ([[LakeFs.walk]]: a file path counts
+    * itself, a missing one throws). Two flat fan-outs of width
+    * [[Width]]: every directory listed, then every footer across ALL
+    * directories opened — a per-directory outer loop would serialize
+    * one footer wave per partition.
     */
   def counts(spark: SparkSession, dirs: Seq[String]): Seq[(Long, Long)] = {
     val conf = spark.sessionState.newHadoopConf()
     val files = Par.map(dirs, Width) { d =>
       val root = new Path(d)
-      val it = root.getFileSystem(conf).listFiles(root, true)
-      val out = Seq.newBuilder[Path]
-      while (it.hasNext) {
-        val p = it.next().getPath
-        if (p.getName.endsWith(".parquet")) out += p
-      }
-      out.result()
+      LakeFs.walk(root.getFileSystem(conf), root).map(_.getPath)
+        .filter(_.getName.endsWith(".parquet"))
     }
     val rows = Par.map(files.flatten, Width) { f =>
       val r = ParquetFileReader.open(HadoopInputFile.fromPath(f, conf))

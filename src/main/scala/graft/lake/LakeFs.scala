@@ -5,25 +5,33 @@ import java.nio.charset.StandardCharsets
 import scala.collection.mutable.ArrayBuffer
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 
 /** Filesystem primitives for the lake layer (reference S10–S13 —
   * `jobs/utils/hdfs.py`), over the Hadoop `FileSystem` API so the same
   * code runs on HDFS and (in tests) the local filesystem. HDFS `rename`
   * is atomic, which is what the swap commit protocol relies on; object
   * stores without atomic rename would need a different committer.
+  *
+  * Recursive listings go through [[LakeFs.walk]], a `listStatus` walk,
+  * never a recursive `FileSystem.listFiles` or `listLocatedStatus`: those
+  * build a `LocatedFileStatus` per file, which on the local filesystem
+  * without Hadoop's native library forks an `ls` process per file to
+  * load permissions, and on HDFS fetches block locations. The lake
+  * reads neither, only names, kinds and lengths.
   */
 class LakeFs(val fs: FileSystem) {
 
+  /** Every file beneath `dir` ([[LakeFs.walk]]); `Nil` when `dir` does
+    * not exist.
+    */
+  def files(dir: String): Seq[FileStatus] =
+    try LakeFs.walk(fs, new Path(dir))
+    catch { case _: java.io.FileNotFoundException => Nil }
+
   /** Recursive file listing (S10 — `jobs/utils/hdfs.py:15-26`). */
-  def lsRecursive(dir: String): Seq[String] = {
-    val p = new Path(dir)
-    if (!fs.exists(p)) return Nil
-    val out = ArrayBuffer.empty[String]
-    val it = fs.listFiles(p, true)
-    while (it.hasNext) out += it.next().getPath.toUri.getPath
-    out.toSeq
-  }
+  def lsRecursive(dir: String): Seq[String] =
+    files(dir).map(_.getPath.toUri.getPath)
 
   /** Zero-byte marker creation (S11 — `jobs/utils/hdfs.py:29-32`). */
   def touch(path: String): Unit = {
@@ -97,6 +105,26 @@ object LakeFs {
   private val YearRe = raw"year=(\d{4})".r
   def extractYearFromPath(path: String): Option[Int] =
     YearRe.findFirstMatchIn(path).map(_.group(1).toInt)
+
+  /** The lake's one recursive listing: the files beneath `root`, the
+    * same set a recursive `fs.listFiles` yields, from one `listStatus`
+    * per directory, depth-first in name order. A file root lists
+    * itself; checksum sidecars (`.crc`) stay hidden by the checksum
+    * filesystem's own filter. As with `listFiles`, a missing root
+    * throws `FileNotFoundException` and a subdirectory deleted mid-walk
+    * is skipped.
+    */
+  def walk(fs: FileSystem, root: Path): Seq[FileStatus] = {
+    val out = ArrayBuffer.empty[FileStatus]
+    def go(dir: Path): Unit =
+      fs.listStatus(dir).sortBy(_.getPath.getName).foreach { s =>
+        if (!s.isDirectory) out += s
+        else try go(s.getPath)
+        catch { case _: java.io.FileNotFoundException => () }
+      }
+    go(root)
+    out.toSeq
+  }
 
   def local(): LakeFs = {
     val conf = new Configuration()

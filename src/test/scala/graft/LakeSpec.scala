@@ -70,6 +70,68 @@ class LakeSpec extends AnyFunSuite {
     assert(byYear(2024).map(_.split('/').last) == Seq("d.csv"))
   }
 
+  // --- Recursive listing (S10) ---
+
+  /** A nested tree as a tick leaves it: csv files with `.done` /
+    * `.failed` markers written through `touch` (so the checksum FS
+    * writes `.crc` sidecars beside them), a `_SUCCESS` file and an
+    * empty subdirectory.
+    */
+  def markerTree(fs: LakeFs): String = {
+    val dir = tmpDir()
+    fs.touch(s"$dir/year=2023/a.csv")
+    fs.touch(s"$dir/year=2023/b.csv")
+    fs.touch(s"$dir/year=2023/b.csv.done")
+    fs.touch(s"$dir/year=2024/month=01/c.csv")
+    fs.touch(s"$dir/year=2024/month=01/c.csv.failed")
+    fs.touch(s"$dir/year=2024/month=02/d.csv")
+    fs.touch(s"$dir/_SUCCESS")
+    fs.mkdirs(s"$dir/year=2025/empty")
+    dir
+  }
+
+  test("lsRecursive: the listStatus walk lists what a recursive listFiles lists") {
+    val fs = fsOps
+    val dir = markerTree(fs)
+    assert(new java.io.File(s"$dir/year=2023/.b.csv.done.crc").exists)
+    val hadoop = {
+      val it = fs.fs.listFiles(new org.apache.hadoop.fs.Path(dir), true)
+      val out = Seq.newBuilder[String]
+      while (it.hasNext) out += it.next().getPath.toUri.getPath
+      out.result()
+    }
+    val got = fs.lsRecursive(dir)
+    assert(got.sorted == hadoop.sorted)
+    assert(got.size == 7)
+    assert(got.contains(s"$dir/_SUCCESS"))
+    assert(!got.exists(_.endsWith(".crc")))
+  }
+
+  test("lsRecursive: a file root lists itself, a missing root lists nothing") {
+    val fs = fsOps
+    val dir = markerTree(fs)
+    assert(fs.lsRecursive(s"$dir/year=2023/a.csv") == Seq(s"$dir/year=2023/a.csv"))
+    assert(fs.lsRecursive(s"$dir/year=2023/nope.csv") == Nil)
+    assert(fs.lsRecursive(s"$dir/nope") == Nil)
+    assert(fs.lsRecursive(s"$dir/year=2025") == Nil)
+  }
+
+  test("listing never asks the filesystem for a LocatedFileStatus") {
+    import org.apache.hadoop.fs.{FilterFileSystem, Path, PathFilter}
+    val located = new FilterFileSystem(LakeFs.local().fs) {
+      private def refuse = throw new UnsupportedOperationException("located listing")
+      override def listFiles(f: Path, recursive: Boolean) = refuse
+      override def listLocatedStatus(f: Path) = refuse
+      override protected def listLocatedStatus(f: Path, filter: PathFilter) = refuse
+    }
+    val fs = new LakeFs(located)
+    val dir = markerTree(fs)
+    assert(fs.lsRecursive(dir).size == 7)
+    val byYear = new Markers(fs).pendingByYear(dir)
+    assert(byYear.map { case (y, fl) => y -> fl.map(_.stripPrefix(dir)) } ==
+      Seq(2023 -> Seq("/year=2023/a.csv"), 2024 -> Seq("/year=2024/month=02/d.csv")))
+  }
+
   // --- Atomic swap (X2) ---
 
   import spark.implicits._
@@ -164,6 +226,21 @@ class LakeSpec extends AnyFunSuite {
     }
     // the table root counts every file beneath it
     assert(got.last == ((got.init.map(_._1).sum, 500L)))
+  }
+
+  test("footer reader: a two-level table and a single-file root equal a scan") {
+    val table = s"${tmpDir()}/t"
+    spark.range(0, 300).selectExpr("id", "id % 2 AS a", "id % 3 AS b")
+      .repartition(4).write.partitionBy("a", "b").parquet(table)
+    val part = s"$table/a=1"
+    val file = new java.io.File(s"$part/b=2").listFiles()
+      .filter(_.getName.endsWith(".parquet")).head.getPath
+    val Seq((tFiles, tRows), (pFiles, pRows), (fFiles, fRows)) =
+      Footers.counts(spark, Seq(table, part, file))
+    assert(tRows == spark.read.parquet(table).count())
+    assert(pRows == spark.read.parquet(part).count())
+    assert(tFiles > pFiles && pFiles > 1)
+    assert(fFiles == 1L && fRows == spark.read.parquet(file).count())
   }
 
   test("two committers racing one table: the second fails fast, state stays whole") {
