@@ -2,7 +2,8 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.operators.{AsOf, CorpusPrep, Dedup, EventsOps, Relational, Reshape, Sampling, Scalars, SetOps, Similarity, Sketches, SkewJoin, TextOps}
+import graft.operators.{AnnIndex, AsOf, CorpusPrep, Dedup, EventsOps, Relational, Reshape, Sampling, Scalars, SetOps, Similarity, Sketches, SkewJoin, TextOps}
+import graft.operators.AnnIndex.Layout
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
@@ -474,35 +475,36 @@ object SparkEntry {
     // artifact (bucket-partitioned members/codes, model, version
     // sidecar), then audit the COMMITTED tables — the q216/q234
     // executed-lake posture applied to the ANN index
-    "q244_ann_index_commit" -> (graft.operators.AnnIndex.commitAudit _),
+    "q244_ann_index_commit" -> ((s, d) => AnnIndex.commitAudit(s, d, Layout.Flat)),
     // the q106 IVF search served FROM the committed artifact —
     // hash-equal to the live q106 with ZERO corpus re-assignment in
     // the serving plan (AnnIndexSpec locks it)
-    "q245_ann_ivf_serve" -> (graft.operators.AnnIndex.ivfServe _),
+    "q245_ann_ivf_serve" -> ((s, d) => AnnIndex.serve(s, d, Layout.Flat)),
     // the q108 ADC search served FROM the committed 8-byte code rows
-    "q246_ann_ivfpq_serve" -> (graft.operators.AnnIndex.ivfPqServe _),
+    "q246_ann_ivfpq_serve" -> ((s, d) => AnnIndex.serveCodes(s, d, Layout.Flat)),
     // committed-vs-arrivals staleness panel: the artifact's member
     // counts + sidecar version against the fresh-crawl split assigned
     // with the COMMITTED centroids — the q132 handoff
-    "q247_ann_index_staleness" -> (graft.operators.AnnIndex.stalenessReport _),
+    "q247_ann_index_staleness" -> (AnnIndex.stalenessReport _),
     // the incremental ingest EXECUTED: base-split build, arrivals
     // assigned+coded with the committed model (map-only over the
     // delta), per-bucket upsert commit — only touched buckets rewrite
-    "q248_ann_index_ingest" -> (graft.operators.AnnIndex.incrementalIngestCommit _),
+    "q248_ann_index_ingest" ->
+      ((s, d) => AnnIndex.ingest(s, d, Layout.Flat, "_inc", 900000L)),
     // the staleness-TRIGGERED refresh policy EXECUTED: one lifecycle
     // root walks noop → touched-bucket ingest → full rebuild, decided
     // by threshold against the same growth ppm, each row carrying the
     // post-action committed witnesses (the q247→q248 operational gap)
-    "q249_ann_index_refresh" -> (graft.operators.AnnIndex.refreshPolicy _),
+    "q249_ann_index_refresh" -> ((s, d) => AnnIndex.refreshPolicy(s, d, Layout.Flat)),
     // write amplification under K successive delta waves: per wave,
     // arrivals, touched buckets, member rows physically rewritten by
     // the wholesale bucket swap, amplification ppm, committed total
-    "q250_ann_index_write_amp" -> (graft.operators.AnnIndex.fragmentationAudit _),
+    "q250_ann_index_write_amp" -> (AnnIndex.fragmentationAudit _),
     // the STREAMING twin of q248: arrivals drain as a parquet file
     // stream, one touched-bucket ingest per micro-batch (foreachBatch,
     // AvailableNow, 1 file/trigger), final artifact hash-equal to the
     // batch ingest — shares q248's oracle verbatim
-    "q251_ann_index_ingest_stream" -> (graft.operators.AnnIndex.streamingIngestCommit _),
+    "q251_ann_index_ingest_stream" -> (AnnIndex.streamingIngestCommit _),
     // hierarchical (coarse→fine) assignment histogram — the engineered
     // answer to the N^1.5 flat-assignment law the 1000× rehearsal
     // measured: ncoarse ∝ N^(1/4) coarse cells route each row to a
@@ -522,11 +524,11 @@ object SparkEntry {
     // the hier-routed artifact BUILD executed + audited: the q244
     // commit machinery with the two-level router inside — the build is
     // where the 18× third-decade win lives (8.9 vs 161.9 s at 1000×)
-    "q256_ann_hier_index_commit" -> (graft.operators.AnnIndex.hierCommitAudit _),
+    "q256_ann_hier_index_commit" -> ((s, d) => AnnIndex.commitAudit(s, d, Layout.Hier)),
     // the q254 search served FROM the committed hier artifact —
     // hash-equal to live q254 (the q245≡q106 posture), zero corpus
     // assignment in the serving plan
-    "q257_ann_hier_serve" -> (graft.operators.AnnIndex.hierServe _),
+    "q257_ann_hier_serve" -> ((s, d) => AnnIndex.serve(s, d, Layout.Hier)),
     // bucket-mass skew, flat vs hier layout: the graded record of the
     // round's serve finding (hot-bucket concentration under two-level
     // routing) — the number a Lloyd-rebalance must move
@@ -539,21 +541,21 @@ object SparkEntry {
     // routing — members keyed by the re-routed buckets, model carrying
     // the updated centroids with their unchanged cells
     "q260_ann_hier_rebalanced_commit" ->
-      (graft.operators.AnnIndex.hierRebalancedCommitAudit _),
+      ((s, d) => AnnIndex.commitAudit(s, d, Layout.HierRebalanced)),
     // the hier search served FROM the rebalanced artifact — the serve
     // gap's closing measurement (probed buckets now near-uniform)
     "q261_ann_hier_rebalanced_serve" ->
-      (graft.operators.AnnIndex.hierRebalancedServe _),
+      ((s, d) => AnnIndex.serve(s, d, Layout.HierRebalanced)),
     // the PRODUCTION composition committed: N^(5/4) two-level build +
     // Lloyd-rebalanced layout + 8-byte PQ code rows, one artifact —
     // commit audit reads back members AND codes witnesses + all knobs
     "q262_ann_hierpq_index_commit" ->
-      (graft.operators.AnnIndex.hierPqCommitAudit _),
+      ((s, d) => AnnIndex.commitAudit(s, d, Layout.HierPq)),
     // the two-level ADC search served FROM that artifact: candidates
     // are committed 8-byte code rows, probes ride the committed model,
     // zero corpus assignment — hash-equal to the live twin (spec-locked)
     "q263_ann_hierpq_adc_serve" ->
-      (graft.operators.AnnIndex.hierRebalancedPqServe _),
+      ((s, d) => AnnIndex.serveCodes(s, d, Layout.HierPq)),
     // the three-way recall panel (flat / seed-hier / REBALANCED) vs
     // brute truth — the q259 serve win's missing recall number (the
     // q90/q255 audit-only cost class)
@@ -567,30 +569,30 @@ object SparkEntry {
     // the refresh policy taught the hier lifecycle: noop / ingest /
     // REBALANCE / rebuild arms executed on one hier root, decided off
     // growth ppm + the committed layout's measured bucket-mass skew
-    "q267_ann_hier_refresh" -> (graft.operators.AnnIndex.hierRefreshPolicy _),
+    "q267_ann_hier_refresh" -> ((s, d) => AnnIndex.refreshPolicy(s, d, Layout.Hier)),
     // the q250 write-amp MITIGATION engineered: append-mode delta
     // ingest (one file per touched bucket per wave, rows written ∝
     // arrivals) + threshold compaction, both sides graded per wave
     "q268_ann_index_append_ingest" ->
-      (graft.operators.AnnIndex.deltaIngestAudit _),
+      ((s, d) => AnnIndex.appendAudit(s, d, Layout.FlatMembers, "_append")),
     // the PRODUCTION-layout lifecycle completed: base-split hier-PQ
     // build, arrivals routed with the COMMITTED two-level model and
     // coded with the COMMITTED positional codebook in one map-only
     // delta pass, members AND codes upserted per touched bucket —
     // no N^(5/4)+N^1.5 rebuild at the 5-minute tick
     "q269_ann_hierpq_ingest" ->
-      (graft.operators.AnnIndex.hierPqIncrementalIngest _),
+      ((s, d) => AnnIndex.ingest(s, d, Layout.HierPq, "_inc", 900000L)),
     // q268's append + threshold-compaction law extended to the CODES
     // table: both tables write ∝ arrivals per wave, compaction and
     // file bounds measured per table, code mass proves correct coding
     "q270_ann_index_append_codes" ->
-      (graft.operators.AnnIndex.deltaIngestCodesAudit _),
+      ((s, d) => AnnIndex.appendAudit(s, d, Layout.Flat, "_append2")),
     // the STREAMING twin of the append lifecycle: three wave-files
     // drained AvailableNow at maxFilesPerTrigger=1, one appendWave per
     // micro-batch through the lease — appendPartitions' at-least-once
     // anti-join idempotence under the hash gate, not just spec'd
     "q271_ann_index_append_stream" ->
-      (graft.operators.AnnIndex.streamingAppendIngest _),
+      (AnnIndex.streamingAppendIngest _),
     // the PQ-coding N^1.5 residual priced: q107's coding pass at the
     // CAPPED codebook width — linear decade law, constant LUT, the
     // build-cost twin of the k ∝ √N production coding
@@ -604,16 +606,16 @@ object SparkEntry {
     // delta shape — touched buckets ≪ nlist, tick IO collapsing toward
     // the map-only delta cost (the touched-bucket law under the gate)
     "q274_ann_hierpq_sparse_tick" ->
-      (graft.operators.AnnIndex.hierPqSparseTickIngest _),
+      ((s, d) => AnnIndex.ingest(s, d, Layout.HierPq, "_inc_sparse", 999000L)),
     // the PRODUCTION layout at the CAPPED width: same rebalanced
     // routing as q262, codebook k = clamp(√(N/4), 8, 64) — coding goes
     // linear, the serve LUT constant (no QueryLutSliceBytes slicing)
     "q275_ann_hierpq_capped_commit" ->
-      (graft.operators.AnnIndex.hierPqCappedCommitAudit _),
+      ((s, d) => AnnIndex.commitAudit(s, d, Layout.HierPqCapped)),
     // ...and its two-level ADC serve off the capped artifact — the
     // q263 probe discipline, constant 8·k·8-byte LUT at every scale
     "q276_ann_hierpq_capped_serve" ->
-      (graft.operators.AnnIndex.hierCappedPqServe _),
+      ((s, d) => AnnIndex.serveCodes(s, d, Layout.HierPqCapped)),
     // the cap CHOSEN, not assumed: recall@5 vs brute truth at fixed
     // widths k ∈ {16,32,64,128} — the knee goes on record (q227's
     // commissioning posture; brute-truth audit class)
@@ -624,7 +626,7 @@ object SparkEntry {
     // AND codes advance per arm, rebalance re-keys without recoding,
     // and the REBUILD arm builds at the capped width (linear coding)
     "q278_ann_hierpq_refresh_capped" ->
-      (graft.operators.AnnIndex.hierPqRefreshPolicy _),
+      ((s, d) => AnnIndex.refreshPolicy(s, d, Layout.HierPqCapped)),
   )
 
   /** Bench family of every registered query (one coarse label per

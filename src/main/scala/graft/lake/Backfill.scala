@@ -32,8 +32,7 @@ object Backfill {
 
   /** Staging dir, app-id-isolated (the q156 single-writer rule). */
   def q234StagingDir(spark: SparkSession, dir: String): String =
-    s"/tmp/graft_q234_lake/${spark.sparkContext.applicationId}/" +
-      new java.io.File(dir).getName
+    LakeFs.scratchRoot(spark, "q234_lake", dir)
 
   /** q234: stage a year-partitioned orders table where even years
     * carry the OLD version's bug (price_c written as 0) and odd years

@@ -117,8 +117,7 @@ object Compaction {
     * audits the exact directory the operator staged.
     */
   def q156StagingDir(spark: SparkSession, dir: String): String =
-    s"/tmp/graft_q156_lake/${spark.sparkContext.applicationId}/" +
-      new java.io.File(dir).getName
+    LakeFs.scratchRoot(spark, "q156_lake", dir)
 
   def planRowsAudit(spark: SparkSession, dir: String): DataFrame = {
     graft.functions.GraftFunctions.ensureRegistered(spark)
@@ -148,8 +147,7 @@ object Compaction {
 
   /** Staging dir for the q216 executed-compaction table (q156 rule). */
   def q216StagingDir(spark: SparkSession, dir: String): String =
-    s"/tmp/graft_q216_lake/${spark.sparkContext.applicationId}/" +
-      new java.io.File(dir).getName
+    LakeFs.scratchRoot(spark, "q216_lake", dir)
 
   /** Executed-compaction audit (q216) — q156 PLANS the rewrite, this
     * RUNS it and grades the outcome: stage the same 16-shards-per-year

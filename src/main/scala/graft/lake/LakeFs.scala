@@ -126,6 +126,17 @@ object LakeFs {
     out.toSeq
   }
 
+  /** The app-id-isolated scratch root of a registry operator that
+    * stages its own lake: `/tmp/graft_<name>/<appId>/<basename(dir)><tag>`.
+    * The app-id segment keeps concurrent runs over one corpus (Verify ∥
+    * Bench) from reading each other's mid-commit state, and stays
+    * stable within a run, so repeat calls reuse the path by overwrite.
+    */
+  def scratchRoot(spark: org.apache.spark.sql.SparkSession, name: String,
+      dir: String, tag: String = ""): String =
+    s"/tmp/graft_$name/${spark.sparkContext.applicationId}/" +
+      s"${new java.io.File(dir).getName}$tag"
+
   def local(): LakeFs = {
     val conf = new Configuration()
     conf.set("fs.defaultFS", "file:///")

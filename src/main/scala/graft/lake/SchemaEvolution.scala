@@ -30,8 +30,7 @@ object SchemaEvolution {
 
   /** Staging dir for the two-version table (app-id segment: see q156). */
   def stagingDir(spark: SparkSession, dir: String): String =
-    s"/tmp/graft_q212_schema/${spark.sparkContext.applicationId}/" +
-      new java.io.File(dir).getName
+    LakeFs.scratchRoot(spark, "q212_schema", dir)
 
   /** Stage two snapshot versions of an orders-derived table and audit
     * the merged read. v=1 (even order keys) has (id, price_c,

@@ -1952,7 +1952,7 @@ object Similarity {
       .withColumn("flat", lit(1L))
     val hier = hierIvfSearch(spark, dir).select(col("q_id"), col("neighbor_id"))
       .withColumn("hier", lit(1L))
-    val rebal = AnnIndex.hierRebalancedServe(spark, dir)
+    val rebal = AnnIndex.serve(spark, dir, AnnIndex.Layout.HierRebalanced)
       .select(col("q_id"), col("neighbor_id"))
       .withColumn("rebal", lit(1L))
     bf.join(broadcast(flat), Seq("q_id", "neighbor_id"), "left_outer")

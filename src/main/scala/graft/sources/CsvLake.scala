@@ -60,8 +60,7 @@ object CsvLake {
     * md5-prefix XOR fingerprint over the hazard-carrying text bodies.
     */
   def roundtripAudit(spark: SparkSession, dir: String): DataFrame = {
-    val out = s"/tmp/graft_q218_csv/${spark.sparkContext.applicationId}/" +
-      new java.io.File(dir).getName
+    val out = graft.lake.LakeFs.scratchRoot(spark, "q218_csv", dir)
     roundtripAuditFor(Tables.documents(spark, dir), out)
   }
 

@@ -56,11 +56,7 @@ object JsonLake {
     */
   def roundtripAudit(spark: SparkSession, dir: String): DataFrame = {
     graft.functions.GraftFunctions.ensureRegistered(spark)
-    // app-id segment: stable within a run (repeat calls reuse via
-    // overwrite) but unique across runs, so a concurrent Verify and
-    // Bench over the same SF can't read each other's mid-overwrite state
-    val out = s"/tmp/graft_q153_jsonl/${spark.sparkContext.applicationId}/" +
-      new java.io.File(dir).getName
+    val out = graft.lake.LakeFs.scratchRoot(spark, "q153_jsonl", dir)
     writeJsonl(Tables.documents(spark, dir), out)
     readJsonl(spark, out, DocumentsSchemaDdl)
       .groupBy(col("source"), col("lang"))

@@ -113,8 +113,7 @@ object DocStream {
     // a fresh temp dir per CALL would leak a corpus-scale copy per call,
     // while the app-id segment keeps concurrent runs (Verify ∥ Bench)
     // from reading each other's mid-overwrite state
-    val landing = s"/tmp/graft_q163_landing/" +
-      s"${spark.sparkContext.applicationId}/${new java.io.File(dir).getName}"
+    val landing = graft.lake.LakeFs.scratchRoot(spark, "q163_landing", dir)
     docs.filter(b >= 900000L)
       .select(col("doc_id"), (col("doc_id") + 1000000000L).as("ingest_us"),
         col("text"), col("lang"), col("source"))

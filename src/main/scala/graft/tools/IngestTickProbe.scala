@@ -1,6 +1,8 @@
 package graft.tools
 
 import graft.GraftSession
+import graft.operators.AnnIndex
+import graft.operators.AnnIndex.Layout.HierPq
 
 /** Measurement main pricing the DEPLOYMENT's marginal ingest tick on
   * the hier-PQ incremental artifact (q269): the graded panel
@@ -29,12 +31,12 @@ object IngestTickProbe {
     val variant = sys.env.getOrElse("SPARK_GRAFT_TICK_VARIANT", "all")
     if (variant == "all") {
       val full = timed(
-        graft.operators.AnnIndex.hierPqIncrementalIngest(spark, sfDir)
+        AnnIndex.ingest(spark, sfDir, HierPq, "_inc", 900000L)
           .write.format("noop").mode("overwrite").save())
       println(f"""{"probe":"hierpq_full_build_plus_ingest","sec":$full%.1f,"sf":"$sfDir"}""")
       (1 to ticks).foreach { i =>
         val t = timed(
-          graft.operators.AnnIndex.hierPqReIngest(spark, sfDir)
+          AnnIndex.replayIngest(spark, sfDir, HierPq, "_inc", 900000L)
             .write.format("noop").mode("overwrite").save())
         println(f"""{"probe":"hierpq_tick","n":$i,"sec":$t%.1f,"sf":"$sfDir"}""")
       }
@@ -45,12 +47,12 @@ object IngestTickProbe {
     // upserts instead of near-wholesale occupancy
     if (variant != "probe") {
       val sparseFull = timed(
-        graft.operators.AnnIndex.hierPqSparseTickIngest(spark, sfDir)
+        AnnIndex.ingest(spark, sfDir, HierPq, "_inc_sparse", 999000L)
           .write.format("noop").mode("overwrite").save())
       println(f"""{"probe":"hierpq_sparse_build_plus_ingest","sec":$sparseFull%.1f,"sf":"$sfDir"}""")
       (1 to ticks).foreach { i =>
         val t = timed(
-          graft.operators.AnnIndex.hierPqSparseReIngest(spark, sfDir)
+          AnnIndex.replayIngest(spark, sfDir, HierPq, "_inc_sparse", 999000L)
             .write.format("noop").mode("overwrite").save())
         println(f"""{"probe":"hierpq_sparse_tick","n":$i,"sec":$t%.1f,"sf":"$sfDir"}""")
       }
@@ -61,12 +63,13 @@ object IngestTickProbe {
     sys.env.get("SPARK_GRAFT_TICK_SPLITS").toSeq
       .flatMap(_.split(',')).map(_.trim.toLong).foreach { split =>
         val bld = timed(
-          graft.operators.AnnIndex.hierPqProbeIngest(spark, sfDir, split)
+          AnnIndex.ingest(spark, sfDir, HierPq, s"_inc_probe_$split", split)
             .write.format("noop").mode("overwrite").save())
         println(f"""{"probe":"hierpq_probe_build","split":$split,"sec":$bld%.1f,"sf":"$sfDir"}""")
         (1 to ticks).foreach { i =>
           val t = timed(
-            graft.operators.AnnIndex.hierPqProbeReIngest(spark, sfDir, split)
+            AnnIndex.replayIngest(spark, sfDir, HierPq, s"_inc_probe_$split",
+              split)
               .write.format("noop").mode("overwrite").save())
           println(f"""{"probe":"hierpq_probe_tick","split":$split,"n":$i,"sec":$t%.1f,"sf":"$sfDir"}""")
         }

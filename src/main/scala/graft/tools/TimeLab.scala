@@ -70,6 +70,8 @@ object TimeLab {
             .flatMap(p => Option(p.getProperty("spark.job.description")))
             .orElse(Option(js.properties)
               .flatMap(p => Option(p.getProperty("callSite.short"))))
+            // else the result stage's call site, e.g. "collect at X.scala:N"
+            .orElse(js.stageInfos.sortBy(_.stageId).lastOption.map(_.name))
             .getOrElse("?")
           jobs.put(js.jobId, (js.time, desc))
         }

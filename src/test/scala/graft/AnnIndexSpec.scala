@@ -3,6 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.{AnnIndex, Similarity}
+import graft.operators.AnnIndex.Layout
 
 /** The persisted-index contract: the committed artifact serves searches
   * hash-equal to the live-computed q106/q108 (commit-then-serve row
@@ -19,15 +20,15 @@ class AnnIndexSpec extends AnyFunSuite {
     df.collect().map(_.toString).toSet
 
   test("served IVF search is row-identical to the live q106") {
-    assert(rows(AnnIndex.ivfServe(spark, sf)) ===
+    assert(rows(AnnIndex.serve(spark, sf, Layout.Flat)) ===
       rows(Similarity.ivfKnnAuto(spark, sf)))
   }
 
   test("hier-served search is row-identical to live q254; plan has zero assignment") {
-    assert(rows(AnnIndex.hierServe(spark, sf)) ===
+    assert(rows(AnnIndex.serve(spark, sf, Layout.Hier)) ===
       rows(Similarity.hierIvfSearch(spark, sf)))
-    AnnIndex.ensureHierCommitted(spark, sf)
-    val plan = AnnIndex.hierServe(spark, sf)
+    AnnIndex.ensure(spark, sf, Layout.Hier)
+    val plan = AnnIndex.serve(spark, sf, Layout.Hier)
       .queryExecution.executedPlan.toString.toLowerCase
     // the live q254 assigns the corpus per invocation (two-level); the
     // served plan must carry NEITHER assignment expression — candidates
@@ -41,7 +42,7 @@ class AnnIndexSpec extends AnyFunSuite {
   }
 
   test("hier commit audit agrees with the live q252 histogram") {
-    val audit = AnnIndex.hierCommitAudit(spark, sf).collect()
+    val audit = AnnIndex.commitAudit(spark, sf, Layout.Hier).collect()
       .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
     val live = Similarity.hierAssignedHistogram(spark, sf).collect()
       .map(r => r.getLong(1) -> r.getLong(2)).toMap
@@ -50,14 +51,14 @@ class AnnIndexSpec extends AnyFunSuite {
   }
 
   test("rebalanced artifact: committed masses equal the q259 panel; serve plan is clean") {
-    val audit = AnnIndex.hierRebalancedCommitAudit(spark, sf).collect()
+    val audit = AnnIndex.commitAudit(spark, sf, Layout.HierRebalanced).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     val panel = Similarity.hierLloydRebalance(spark, sf).collect().head
     assert(audit.size.toLong == panel.getLong(0), "bucket count")
     assert(audit.values.sum == panel.getLong(1), "total committed rows")
     assert(audit.values.min == panel.getLong(2) &&
       audit.values.max == panel.getLong(3), "mass extremes")
-    val plan = AnnIndex.hierRebalancedServe(spark, sf)
+    val plan = AnnIndex.serve(spark, sf, Layout.HierRebalanced)
       .queryExecution.executedPlan.toString.toLowerCase
     assert(!plan.contains("quantizedhierargmaxdot") &&
       !plan.contains("quantizedargmaxdot"),
@@ -67,30 +68,30 @@ class AnnIndexSpec extends AnyFunSuite {
   }
 
   test("rebalanced lifecycle is idempotent; layouts coexist under one corpus") {
-    val m1 = AnnIndex.ensureHierRebalancedCommitted(spark, sf)
-    val m2 = AnnIndex.ensureHierRebalancedCommitted(spark, sf)
+    val m1 = AnnIndex.ensure(spark, sf, Layout.HierRebalanced)
+    val m2 = AnnIndex.ensure(spark, sf, Layout.HierRebalanced)
     assert(m1 === m2)
     // same knob card as the seed-hier artifact, different root
-    val seed = AnnIndex.ensureHierCommitted(spark, sf)
+    val seed = AnnIndex.ensure(spark, sf, Layout.Hier)
     assert(seed.nlist == m1.nlist && seed.ncoarse == m1.ncoarse)
-    assert(AnnIndex.hierRebalancedRoot(spark, sf) !=
-      AnnIndex.hierIndexRoot(spark, sf))
+    assert(Layout.HierRebalanced.root(spark, sf) !=
+      Layout.Hier.root(spark, sf))
   }
 
   test("hier lifecycle is idempotent and fingerprint-gated") {
-    val m1 = AnnIndex.ensureHierCommitted(spark, sf)
-    val m2 = AnnIndex.ensureHierCommitted(spark, sf)
+    val m1 = AnnIndex.ensure(spark, sf, Layout.Hier)
+    val m2 = AnnIndex.ensure(spark, sf, Layout.Hier)
     assert(m1 === m2)
     assert(m1.perCell >= 1 && m1.cprobe >= 2 && m1.ncoarse >= 4)
   }
 
   test("served IVF-PQ search is row-identical to the live q108") {
-    assert(rows(AnnIndex.ivfPqServe(spark, sf)) ===
+    assert(rows(AnnIndex.serveCodes(spark, sf, Layout.Flat)) ===
       rows(Similarity.ivfPqSearchAuto(spark, sf)))
   }
 
   test("serving plans carry zero corpus re-assignment; live plans do") {
-    AnnIndex.ensureCommitted(spark, sf)
+    AnnIndex.ensure(spark, sf, Layout.Flat)
     // plans render expressions by CLASS prettyName (lowercased), not by
     // the registered SQL function name
     val argmax = "quantizedargmaxdot"
@@ -102,8 +103,8 @@ class AnnIndexSpec extends AnyFunSuite {
     assert(plan(Similarity.ivfPqSearchAuto(spark, sf)).contains(argmax))
     // the served searches read the committed artifact: no assignment
     // expression anywhere, and the candidate scan is the index path
-    val pIvf = plan(AnnIndex.ivfServe(spark, sf))
-    val pPq = plan(AnnIndex.ivfPqServe(spark, sf))
+    val pIvf = plan(AnnIndex.serve(spark, sf, Layout.Flat))
+    val pPq = plan(AnnIndex.serveCodes(spark, sf, Layout.Flat))
     assert(!pIvf.contains(argmax),
       s"served IVF plan must not re-assign the corpus:\n${pIvf.take(2000)}")
     assert(!pPq.contains(argmax),
@@ -131,27 +132,59 @@ class AnnIndexSpec extends AnyFunSuite {
   }
 
   test("ensureCommitted is idempotent and version+corpus gated") {
-    val meta = AnnIndex.ensureCommitted(spark, sf)
+    val meta = AnnIndex.ensure(spark, sf, Layout.Flat)
     assert(meta.version === AnnIndex.IndexVersion)
     val lakeFs = graft.lake.LakeFs.forSpark(spark)
     val sidecar = s"${AnnIndex.indexRoot(spark, sf)}/_index_version.json"
     val before = lakeFs.fs.getFileStatus(
       new org.apache.hadoop.fs.Path(sidecar)).getModificationTime
     // a second call is a sidecar read — no rebuild, no rewrite
-    assert(AnnIndex.ensureCommitted(spark, sf) === meta)
+    assert(AnnIndex.ensure(spark, sf, Layout.Flat) === meta)
     val after = lakeFs.fs.getFileStatus(
       new org.apache.hadoop.fs.Path(sidecar)).getModificationTime
     assert(after === before, "second ensureCommitted must not rebuild")
     // a missing sidecar certifies an incomplete commit → rebuild
     lakeFs.delete(sidecar)
-    assert(AnnIndex.readMeta(spark, sf).isEmpty)
-    assert(AnnIndex.ensureCommitted(spark, sf) === meta)
-    assert(AnnIndex.readMeta(spark, sf) === Some(meta))
+    assert(AnnIndex.readMeta(spark, Layout.Flat.root(spark, sf)).isEmpty)
+    assert(AnnIndex.ensure(spark, sf, Layout.Flat) === meta)
+    assert(AnnIndex.readMeta(spark, Layout.Flat.root(spark, sf)) === Some(meta))
+  }
+
+  test("every committed layout: ensure is idempotent, its sidecar round-trips, a lost sidecar rebuilds") {
+    val lakeFs = graft.lake.LakeFs.forSpark(spark)
+    val committed = Seq(Layout.Flat, Layout.Hier, Layout.HierRebalanced,
+      Layout.HierPq, Layout.HierPqCapped)
+    assert(committed.map(_.suffix).distinct.size === committed.size)
+    committed.foreach { layout =>
+      val root = layout.root(spark, sf)
+      val sidecar = new org.apache.hadoop.fs.Path(s"$root/_index_version.json")
+      def mtime() = lakeFs.fs.getFileStatus(sidecar).getModificationTime
+      val meta = AnnIndex.ensure(spark, sf, layout)
+      assert(meta.version === AnnIndex.IndexVersion, s"$layout")
+      val before = mtime()
+      // a second ensure reuses the artifact: same card, sidecar untouched
+      assert(AnnIndex.ensure(spark, sf, layout) === meta, s"$layout")
+      assert(mtime() === before, s"$layout: second ensure must not rebuild")
+      assert(AnnIndex.readMeta(spark, root) === Some(meta),
+        s"$layout: the parsed sidecar must equal the card ensure returned")
+      // a missing sidecar certifies an incomplete commit → rebuild
+      lakeFs.delete(sidecar.toString)
+      assert(AnnIndex.readMeta(spark, root).isEmpty, s"$layout")
+      assert(AnnIndex.ensure(spark, sf, layout) === meta, s"$layout")
+      assert(AnnIndex.readMeta(spark, root) === Some(meta), s"$layout")
+      // a knob the current rule would not derive (a re-pinned width)
+      // invalidates the artifact like a version or corpus change does
+      lakeFs.writeString(sidecar.toString, meta.copy(k = meta.k + 1).fields
+        .map { case (key, v) => s""""$key":$v""" }.mkString("{", ",", "}"))
+      assert(AnnIndex.readMeta(spark, root).map(_.k) === Some(meta.k + 1))
+      assert(AnnIndex.ensure(spark, sf, layout) === meta, s"$layout")
+      assert(AnnIndex.readMeta(spark, root) === Some(meta), s"$layout")
+    }
   }
 
   test("staleness report covers every committed bucket and stamps the version") {
     val got = AnnIndex.stalenessReport(spark, sf).collect()
-    val audit = AnnIndex.commitAudit(spark, sf).collect()
+    val audit = AnnIndex.commitAudit(spark, sf, Layout.Flat).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got.map(_.getLong(0)).toSet === audit.keySet)
     got.foreach { r =>
@@ -182,7 +215,7 @@ class AnnIndexSpec extends AnyFunSuite {
         java.nio.file.Files.copy(p, dst.resolve(p.getFileName.toString)))
       finally ls.close()
     } else java.nio.file.Files.copy(src, dst)
-    val meta = AnnIndex.ensureCommitted(spark, dir)
+    val meta = AnnIndex.ensure(spark, dir, Layout.Flat)
     val lakeFs = graft.lake.LakeFs.forSpark(spark)
     val sidecar = s"${AnnIndex.indexRoot(spark, dir)}/_index_version.json"
     def mtime() = lakeFs.fs.getFileStatus(
@@ -199,7 +232,7 @@ class AnnIndexSpec extends AnyFunSuite {
     java.nio.file.Files.setLastModifiedTime(one,
       java.nio.file.attribute.FileTime.fromMillis(
         System.currentTimeMillis() + 5000L))
-    val meta2 = AnnIndex.ensureCommitted(spark, dir)
+    val meta2 = AnnIndex.ensure(spark, dir, Layout.Flat)
     assert(meta2.fp !== meta.fp, "fingerprint must track file metadata")
     assert(mtime() > before, "content change must trigger a rebuild")
   }
@@ -215,7 +248,7 @@ class AnnIndexSpec extends AnyFunSuite {
   }
 
   test("refresh policy walks all three arms and executes what it decides") {
-    val got = AnnIndex.refreshPolicy(spark, sf).collect()
+    val got = AnnIndex.refreshPolicy(spark, sf, Layout.Flat).collect()
       .map(r => r.getString(0) -> r).toMap
     assert(got.keySet === Set("fresh", "stale", "drift"))
     assert(got("fresh").getString(1) === "noop")
@@ -252,17 +285,17 @@ class AnnIndexSpec extends AnyFunSuite {
   }
 
   test("streaming ingest twin commits the exact q248 artifact") {
-    val batchRows = rows(AnnIndex.incrementalIngestCommit(spark, sf))
+    val batchRows = rows(AnnIndex.ingest(spark, sf, Layout.Flat, "_inc", 900000L))
     val streamRows = rows(AnnIndex.streamingIngestCommit(spark, sf))
     assert(streamRows === batchRows,
       "multi-batch streamed upserts must land byte-identical to the batch ingest")
   }
 
   test("PQ'd rebalanced serve is row-identical to the live ADC twin; plan is clean") {
-    assert(rows(AnnIndex.hierRebalancedPqServe(spark, sf)) ===
+    assert(rows(AnnIndex.serveCodes(spark, sf, Layout.HierPq)) ===
       rows(Similarity.hierRebalancedAdcSearch(spark, sf)))
-    AnnIndex.ensureHierRebalancedPqCommitted(spark, sf)
-    val plan = AnnIndex.hierRebalancedPqServe(spark, sf)
+    AnnIndex.ensure(spark, sf, Layout.HierPq)
+    val plan = AnnIndex.serveCodes(spark, sf, Layout.HierPq)
       .queryExecution.executedPlan.toString
     val low = plan.toLowerCase
     // zero corpus assignment of EITHER kind, candidates off committed
@@ -278,22 +311,22 @@ class AnnIndexSpec extends AnyFunSuite {
   }
 
   test("PQ'd rebalanced commit: members = codes per bucket, masses match q259's routing") {
-    val audit = AnnIndex.hierPqCommitAudit(spark, sf).collect()
+    val audit = AnnIndex.commitAudit(spark, sf, Layout.HierPq).collect()
     audit.foreach { r =>
       assert(r.getAs[Long]("n_codes") === r.getAs[Long]("n_members"),
         s"bucket ${r.getLong(0)}: every member needs a code row")
       assert(r.getAs[Long]("k") >= Similarity.PqK)
     }
     // same routing as the members-only rebalanced artifact (q260)
-    val rebal = AnnIndex.hierRebalancedCommitAudit(spark, sf).collect()
+    val rebal = AnnIndex.commitAudit(spark, sf, Layout.HierRebalanced).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(audit.map(r => r.getLong(0) -> r.getAs[Long]("n_members")).toMap
       === rebal, "the PQ'd layout must commit EXACTLY the q259 routing")
   }
 
   test("capped production twin: identical routing, different width, clean serve plan") {
-    val full = AnnIndex.hierPqCommitAudit(spark, sf).collect()
-    val capped = AnnIndex.hierPqCappedCommitAudit(spark, sf).collect()
+    val full = AnnIndex.commitAudit(spark, sf, Layout.HierPq).collect()
+    val capped = AnnIndex.commitAudit(spark, sf, Layout.HierPqCapped).collect()
     def route(rs: Array[org.apache.spark.sql.Row]) = rs.map(r =>
       (r.getAs[Long]("bucket"), r.getAs[Long]("n_members"),
         r.getAs[Long]("vec_xor"))).toSet
@@ -306,10 +339,10 @@ class AnnIndexSpec extends AnyFunSuite {
         "the twin must grade a genuinely different width")
     }
     // serve ≡ live at the capped width (the q245≡q106 parity posture)
-    assert(rows(AnnIndex.hierCappedPqServe(spark, sf)) ===
+    assert(rows(AnnIndex.serveCodes(spark, sf, Layout.HierPqCapped)) ===
       rows(Similarity.hierCappedAdcSearch(spark, sf)))
-    AnnIndex.ensureHierCappedPqCommitted(spark, sf)
-    val plan = AnnIndex.hierCappedPqServe(spark, sf)
+    AnnIndex.ensure(spark, sf, Layout.HierPqCapped)
+    val plan = AnnIndex.serveCodes(spark, sf, Layout.HierPqCapped)
       .queryExecution.executedPlan.toString
     val low = plan.toLowerCase
     assert(!low.contains("quantizedhierargmaxdot") &&
@@ -319,7 +352,7 @@ class AnnIndexSpec extends AnyFunSuite {
       s"capped serve must scan a committed artifact:\n${plan.take(2000)}")
     // the plan string truncates scan locations — pin the layout root
     // through the actual input files instead
-    assert(AnnIndex.hierCappedPqServe(spark, sf).inputFiles
+    assert(AnnIndex.serveCodes(spark, sf, Layout.HierPqCapped).inputFiles
       .exists(_.contains("hier2pqc")),
       "capped serve must read the CAPPED artifact's tables")
     assert(plan.linesIterator.count(l =>
@@ -328,7 +361,7 @@ class AnnIndexSpec extends AnyFunSuite {
   }
 
   test("capped hier-PQ refresh: four arms, codes ride every arm, rebuild is capped") {
-    val got = AnnIndex.hierPqRefreshPolicy(spark, sf).collect()
+    val got = AnnIndex.refreshPolicy(spark, sf, Layout.HierPqCapped).collect()
       .map(r => r.getString(0) -> r).toMap
     assert(got.keySet === Set("fresh", "stale", "hot", "drift"))
     assert(got("fresh").getString(1) === "noop")
@@ -367,7 +400,7 @@ class AnnIndexSpec extends AnyFunSuite {
   }
 
   test("hier refresh policy walks all four arms and executes what it decides") {
-    val got = AnnIndex.hierRefreshPolicy(spark, sf).collect()
+    val got = AnnIndex.refreshPolicy(spark, sf, Layout.Hier).collect()
       .map(r => r.getString(0) -> r).toMap
     assert(got.keySet === Set("fresh", "stale", "hot", "drift"))
     assert(got("fresh").getString(1) === "noop")
@@ -390,7 +423,7 @@ class AnnIndexSpec extends AnyFunSuite {
   }
 
   test("append-mode ingest: rows written ∝ arrivals, files per bucket bounded") {
-    val waves = AnnIndex.deltaIngestAudit(spark, sf).collect()
+    val waves = AnnIndex.appendAudit(spark, sf, Layout.FlatMembers, "_append").collect()
       .sortBy(_.getAs[Long]("wave"))
     assert(waves.length === 3)
     waves.foreach { r =>
@@ -414,13 +447,13 @@ class AnnIndexSpec extends AnyFunSuite {
     assert(here < q250,
       s"mitigation must write fewer rows than the wholesale swap ($here vs $q250)")
     // determinism / replay: a rerun rebuilds and lands the same panel
-    val again = AnnIndex.deltaIngestAudit(spark, sf).collect()
+    val again = AnnIndex.appendAudit(spark, sf, Layout.FlatMembers, "_append").collect()
       .sortBy(_.getAs[Long]("wave"))
     assert(again.map(_.toString).toSeq === waves.map(_.toString).toSeq)
   }
 
   test("incremental ingest: base ∪ delta covers the corpus, codes ride along") {
-    val audit = AnnIndex.incrementalIngestCommit(spark, sf).collect()
+    val audit = AnnIndex.ingest(spark, sf, Layout.Flat, "_inc", 900000L).collect()
     val n = graft.sources.Tables.embeddings(spark, sf).count()
     // every corpus vector is a committed member exactly once, every
     // member carries a code row, and the arrivals are the ≥0.9 split
@@ -431,7 +464,7 @@ class AnnIndexSpec extends AnyFunSuite {
     assert(arrivals > 0L && arrivals < n / 5)
     // base-derived knobs: the base split is smaller than the corpus, so
     // nlist/k derive from ITS count (≠ the full build's at this sf)
-    val meta = AnnIndex.readMeta(spark, sf)
+    val meta = AnnIndex.readMeta(spark, Layout.Flat.root(spark, sf))
     audit.foreach(r => assert(r.getLong(6) === AnnIndex.IndexVersion))
     assert(meta.exists(_.n === n) || meta.isEmpty) // full root untouched
   }
@@ -446,7 +479,7 @@ class AnnIndexSpec extends AnyFunSuite {
   }
 
   test("hier-PQ ingest: base ∪ delta covers the corpus, codes ride every member") {
-    val audit = AnnIndex.hierPqIncrementalIngest(spark, sf).collect()
+    val audit = AnnIndex.ingest(spark, sf, Layout.HierPq, "_inc", 900000L).collect()
     val n = graft.sources.Tables.embeddings(spark, sf).count()
     assert(audit.map(_.getAs[Long]("n_members")).sum === n)
     audit.foreach { r =>
@@ -462,13 +495,13 @@ class AnnIndexSpec extends AnyFunSuite {
     // the committed artifact (model + codebook re-read from it) must
     // land the byte-identical panel — the anti-join idempotence the
     // 5-minute ticker's crash-and-rerun depends on
-    val replay = AnnIndex.hierPqReIngest(spark, sf).collect()
+    val replay = AnnIndex.replayIngest(spark, sf, Layout.HierPq, "_inc", 900000L).collect()
     assert(replay.map(_.toString).toSet === audit.map(_.toString).toSet,
       "replayed delta must rewrite, never duplicate")
     // plan lock: the graded panel reads ONLY the committed tables —
     // no corpus scan, no assignment expression of either kind (all
     // routing/coding happened in the eager ingest, through the lease)
-    val plan = AnnIndex.hierPqReIngest(spark, sf)
+    val plan = AnnIndex.replayIngest(spark, sf, Layout.HierPq, "_inc", 900000L)
       .queryExecution.executedPlan.toString.toLowerCase
     assert(plan.contains("graft_ann_index"),
       s"q269 panel must read the committed artifact:\n${plan.take(2000)}")
@@ -480,7 +513,7 @@ class AnnIndexSpec extends AnyFunSuite {
   }
 
   test("append-mode codes: both tables write ∝ arrivals, bounded files, mass grows") {
-    val waves = AnnIndex.deltaIngestCodesAudit(spark, sf).collect()
+    val waves = AnnIndex.appendAudit(spark, sf, Layout.Flat, "_append2").collect()
       .sortBy(_.getAs[Long]("wave"))
     assert(waves.length === 3)
     waves.foreach { r =>
@@ -505,7 +538,7 @@ class AnnIndexSpec extends AnyFunSuite {
   }
 
   test("sparse tick: ≪1% arrivals, codes ride along, replay idempotent") {
-    val audit = AnnIndex.hierPqSparseTickIngest(spark, sf).collect()
+    val audit = AnnIndex.ingest(spark, sf, Layout.HierPq, "_inc_sparse", 999000L).collect()
     val n = graft.sources.Tables.embeddings(spark, sf).count()
     assert(audit.map(_.getAs[Long]("n_members")).sum === n)
     audit.foreach(r =>
@@ -519,7 +552,8 @@ class AnnIndexSpec extends AnyFunSuite {
     assert(audit.count(_.getAs[Long]("n_arrived") > 0L) <= arrivals,
       "touched buckets are bounded by the arrival count")
     // at-least-once replay of the sparse delta lands the identical panel
-    val replay = AnnIndex.hierPqSparseReIngest(spark, sf).collect()
+    val replay = AnnIndex.replayIngest(spark, sf, Layout.HierPq, "_inc_sparse",
+      999000L).collect()
     assert(replay.map(_.toString).toSet === audit.map(_.toString).toSet,
       "replayed sparse tick must rewrite, never duplicate")
   }
@@ -542,7 +576,7 @@ class AnnIndexSpec extends AnyFunSuite {
   }
 
   test("streaming append twin's final state matches the batch law") {
-    val batch = AnnIndex.deltaIngestCodesAudit(spark, sf).collect()
+    val batch = AnnIndex.appendAudit(spark, sf, Layout.Flat, "_append2").collect()
       .sortBy(_.getAs[Long]("wave"))
     val panel = AnnIndex.streamingAppendIngest(spark, sf).collect()
     val n = graft.sources.Tables.embeddings(spark, sf).count()

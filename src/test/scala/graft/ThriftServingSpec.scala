@@ -303,7 +303,8 @@ class ThriftServingSpec extends AnyFunSuite
     // committed-search and staleness panels hold row identity over JDBC
     val queries = Seq(
       serveAll("ann_ivf_served",
-        graft.operators.AnnIndex.ivfServe(spark, sf)),
+        graft.operators.AnnIndex.serve(spark, sf,
+          graft.operators.AnnIndex.Layout.Flat)),
       serveAll("ann_stale_served",
         graft.operators.AnnIndex.stalenessReport(spark, sf)))
     assertServedMatchesLocal(queries, "ann-index surface")
