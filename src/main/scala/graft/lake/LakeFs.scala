@@ -6,6 +6,7 @@ import scala.collection.mutable.ArrayBuffer
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
 
 /** Filesystem primitives for the lake layer (reference S10–S13 —
   * `jobs/utils/hdfs.py`), over the Hadoop `FileSystem` API so the same
@@ -131,11 +132,33 @@ object LakeFs {
     * The app-id segment keeps concurrent runs over one corpus (Verify ∥
     * Bench) from reading each other's mid-commit state, and stays
     * stable within a run, so repeat calls reuse the path by overwrite.
+    * The first call per (name, application) registers a [[Reaper]]
+    * that deletes `/tmp/graft_<name>/<appId>` when the application
+    * ends; other applications' directories are never touched.
     */
   def scratchRoot(spark: org.apache.spark.sql.SparkSession, name: String,
-      dir: String, tag: String = ""): String =
-    s"/tmp/graft_$name/${spark.sparkContext.applicationId}/" +
-      s"${new java.io.File(dir).getName}$tag"
+      dir: String, tag: String = ""): String = {
+    val sc = spark.sparkContext
+    val appRoot = s"/tmp/graft_$name/${sc.applicationId}"
+    reapers.computeIfAbsent(appRoot, { _ =>
+      val root = new Path(appRoot)
+      val r = new Reaper(root.getFileSystem(sc.hadoopConfiguration), root)
+      sc.addSparkListener(r)
+      r
+    })
+    s"$appRoot/${new java.io.File(dir).getName}$tag"
+  }
+
+  /** Deletes one application's scratch root when that application ends. */
+  private[graft] final class Reaper(fs: FileSystem, val root: Path)
+      extends SparkListener {
+    override def onApplicationEnd(end: SparkListenerApplicationEnd): Unit =
+      fs.delete(root, true)
+  }
+
+  /** The registered reapers, by application scratch root. */
+  private[graft] val reapers =
+    new java.util.concurrent.ConcurrentHashMap[String, Reaper]()
 
   def local(): LakeFs = {
     val conf = new Configuration()

@@ -8,7 +8,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *  - every successful ingest snapshots the year's DataFrame to
   *    `<root>/year=Y/v_<stamp>/` (immutable Parquet copy)
   *  - a `_version.json` sidecar records version id, source file, year,
-  *    timestamp, row count, checksum, columns and the retention setting
+  *    timestamp, row count (off the snapshot's Parquet footers, no
+  *    Spark job), checksum, columns and the retention setting
   *  - versions list newest-first; `cleanup` keeps the newest `keep`
   *  - restore reads a snapshot back and recommits it through the atomic
   *    swap writer, so a restore is as crash-safe as an ingest
@@ -44,7 +45,7 @@ class Versioning(
       .get
     val dir = s"${yearDir(year)}/$version"
     df.write.mode("overwrite").parquet(dir)
-    val rowCount = spark.read.parquet(dir).count()
+    val rowCount = Footers.counts(spark, Seq(dir)).head._2
     val checksum = Versioning.pathChecksum(dir)
     import graft.util.Json.{quote => q}
     val cols = df.columns.map(q).mkString("[", ",", "]")

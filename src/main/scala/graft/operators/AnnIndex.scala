@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, FloatType, LongType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
 
 import graft.lake.{AtomicPartitionWriter, LakeFs}
@@ -102,6 +103,24 @@ object AnnIndex {
   private def codesDir(root: String) = s"$root/codes"
   private def modelDir(root: String) = s"$root/model"
   private def sidecarPath(root: String) = s"$root/_index_version.json"
+
+  /** The schemas the build writes, the partition column included. Every
+    * committed table is opened with its own, so an open runs no
+    * schema-inference job and `bucket` reads back as the long the build
+    * wrote, not the int partition-type inference makes of small ids.
+    */
+  private val MembersSchema = StructType(Seq(StructField("vec_id", LongType),
+    StructField("embedding", ArrayType(FloatType)), StructField("bucket", LongType)))
+  private val CodesSchema = StructType(StructField("vec_id", LongType) +:
+    (0 until Similarity.PqSubspaces).map(m => StructField(s"code_$m", LongType)) :+
+    StructField("bucket", LongType))
+  private val ModelSchema = StructType(Seq(StructField("c_id", LongType),
+    StructField("embedding", ArrayType(FloatType)), StructField("cell", LongType)))
+
+  /** One `kind=` slice of a committed model table. */
+  private def modelKind(spark: SparkSession, root: String,
+      kind: String): DataFrame =
+    spark.read.schema(ModelSchema).parquet(s"${modelDir(root)}/kind=$kind")
 
   /** PQ codebook width rule of a layout: none (the width is still
     * frozen, for one sidecar format), derived k ∝ √N, or capped.
@@ -247,7 +266,7 @@ object AnnIndex {
     */
   private def modelLits(spark: SparkSession, root: String,
       kind: String): Seq[(Long, Array[Float])] =
-    spark.read.parquet(s"${modelDir(root)}/kind=$kind")
+    modelKind(spark, root, kind)
       .select(col("c_id"), col("embedding"))
       .collect()
       .map(r => r.getLong(0) -> r.getSeq[Float](1).toArray)
@@ -256,7 +275,7 @@ object AnnIndex {
   /** The committed fine centroids with their cells: (cell, f_id, emb). */
   private def fineRows(spark: SparkSession,
       root: String): Seq[(Long, Long, Array[Float])] =
-    spark.read.parquet(s"${modelDir(root)}/kind=ivf")
+    modelKind(spark, root, "ivf")
       .select(col("cell"), col("c_id"), col("embedding")).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getSeq[Float](2).toArray))
       .toSeq
@@ -277,12 +296,13 @@ object AnnIndex {
     }
   }
 
-  /** A committed bucket-partitioned table, with the partition column
-    * restored to the long the build wrote (partition-type inference
-    * reads small bucket ids back as ints).
+  /** A committed bucket-partitioned table (`members` or `codes`, by its
+    * directory name), read with the schema the build writes.
     */
   private def bucketTable(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path).withColumn("bucket", col("bucket").cast("long"))
+    spark.read.schema(
+      if (new org.apache.hadoop.fs.Path(path).getName == "codes") CodesSchema
+      else MembersSchema).parquet(path)
 
   /** Sum of a code row's eight subspace codes. */
   private def codeMass: Column =
@@ -760,8 +780,9 @@ object AnnIndex {
     * (`maxFilesPerTrigger=1`), hand each batch's (vec_id, embedding)
     * rows to `perBatch` through `foreachBatch`, and require at least
     * two batches — a single-batch drain proves nothing beyond the
-    * batch lifecycle. `foreachBatch` is at-least-once; replay safety is
-    * the delta's anti-join idempotence, not luck. The checkpoint is
+    * batch lifecycle; `src` holds corpus (vec_id, embedding) rows.
+    * `foreachBatch` is at-least-once; replay safety is the delta's
+    * anti-join idempotence, not luck. The checkpoint is
     * fresh per call (a reused one would skip every file after the base
     * rebuild); it and the staged `src` are deleted once the drain ends.
     */
@@ -771,7 +792,7 @@ object AnnIndex {
     val ckpt = s"${root}_ckpt_${streamRunCounter.incrementAndGet()}"
     val batches = new java.util.concurrent.atomic.AtomicLong(0L)
     try {
-      spark.readStream.schema(spark.read.parquet(src).schema)
+      spark.readStream.schema(StructType(MembersSchema.take(2)))
         .option("maxFilesPerTrigger", "1")
         .parquet(src)
         .writeStream

@@ -1,6 +1,6 @@
 package graft.quality
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -60,43 +60,42 @@ object DataQuality {
         if (extra.isEmpty) Nil else Seq(s"extra: ${extra.mkString(",")}")))
   }
 
-  /** Null id columns are fatal (reference `jobs/data_quality.py:43-51`). */
-  def checkNotNull(df: DataFrame, cols: Seq[String]): CheckResult = {
-    val present = cols.filter(df.columns.contains)
-    val counts = present.map(c =>
-      sum(when(col(c).isNull, 1L).otherwise(0L)).as(c))
-    if (counts.isEmpty) return CheckResult("nulls/id-columns", Fatal, true, Nil)
-    val row = df.agg(counts.head, counts.tail: _*).collect()(0)
-    val bad = present.zipWithIndex.collect {
-      case (c, i) if row.getLong(i) > 0 => s"$c has ${row.getLong(i)} nulls"
-    }
-    CheckResult("nulls/id-columns", Fatal, bad.isEmpty, bad)
-  }
-
   /** Non-sentinel `date` values must match YYYY-MM (reference
-    * `jobs/data_quality.py:54-65`); distributed, sampled.
+    * `jobs/data_quality.py:54-65`).
+    */
+  private def badDate(date: Column): Column =
+    date.isNotNull && !date.rlike(MonthRe) &&
+      !date.isin(DateSentinels.map(lit(_)): _*)
+
+  /** Declared total off the horizontal coalesce-sum by more than ±1%
+    * (reference `jobs/data_quality.py:68-88`).
+    */
+  private def offTotal(total: Column, computed: Column): Column =
+    total.isNotNull && abs(total - computed) > abs(total) * 0.01
+
+  private def computedTotal(amountCols: Seq[String]): Column =
+    amountCols.map(c => coalesce(col(c), lit(0.0))).reduceOption(_ + _)
+      .getOrElse(lit(0.0))
+
+  /** The date-format check's violation sample: up to [[SampleLimit]]
+    * distinct bad values.
     */
   def checkDateFormat(df: DataFrame, dateCol: String = "date"): CheckResult = {
-    val bad = df
-      .filter(col(dateCol).isNotNull)
-      .filter(!col(dateCol).rlike(MonthRe) &&
-        !col(dateCol).isin(DateSentinels.map(lit(_)): _*))
+    val bad = df.filter(badDate(col(dateCol)))
       .select(col(dateCol)).distinct().limit(SampleLimit)
       .collect().map(_.getString(0))
     CheckResult("format/date", Fatal, bad.isEmpty,
       bad.map(v => s"bad date value: '$v'"))
   }
 
-  /** Horizontal coalesce-sum vs declared total, ±1% tolerance (reference
-    * `jobs/data_quality.py:68-88`). Warning severity.
+  /** The total-tolerance check's violation sample (Warning severity):
+    * up to [[SampleLimit]] off-total rows.
     */
   def checkTotalTolerance(
       df: DataFrame, totalCol: String, amountCols: Seq[String]): CheckResult = {
-    val computed = amountCols.map(c => coalesce(col(c), lit(0.0))).reduce(_ + _)
     val bad = df
-      .withColumn("__computed", computed)
-      .filter(col(totalCol).isNotNull &&
-        abs(col(totalCol) - col("__computed")) > abs(col(totalCol)) * 0.01)
+      .withColumn("__computed", computedTotal(amountCols))
+      .filter(offTotal(col(totalCol), col("__computed")))
       .select(col("date"), col(totalCol), col("__computed"))
       .limit(SampleLimit).collect()
       .map(r => s"${r.get(0)}: declared=${r.get(1)} computed=${r.get(2)}")
@@ -126,26 +125,39 @@ object DataQuality {
     CheckResult("monotonic/remaining", Warning, bad.isEmpty, bad.toSeq)
   }
 
-  /** Empty input is fatal: a header-only file has nothing to load and
-    * must be quarantined, not vacuously pass every per-row check.
+  /** The full gate, reference order (`jobs/data_quality.py:105-144`).
+    * After the driver-only schema check, ONE aggregate counts the rows,
+    * each id column's nulls (reference `jobs/data_quality.py:43-51`),
+    * the bad dates and the off-total rows. Empty input is fatal: a
+    * header-only file has nothing to load and must be quarantined, not
+    * vacuously pass every per-row check. The date and tolerance checks
+    * scan again only when they counted a violation, to sample it; the
+    * monotonic check keeps its own window over the `remaining` rows,
+    * since folding it in would sort every row of a year in one task.
     */
-  def checkNonEmpty(df: DataFrame): CheckResult = {
-    val empty = df.isEmpty
-    CheckResult("rows/non-empty", Fatal, !empty,
-      if (empty) Seq("no data rows") else Nil)
-  }
-
-  /** The full gate, reference order (`jobs/data_quality.py:105-144`). */
   def run(df: DataFrame, expectedCols: Seq[String], idCols: Seq[String],
       totalCol: String, amountCols: Seq[String]): Report = {
     val schema = checkSchema(df, expectedCols)
     if (schema.exists(_.blocking)) return Report(schema)
-    val nonEmpty = checkNonEmpty(df)
-    if (nonEmpty.blocking) return Report(schema :+ nonEmpty)
+    val ids = idCols.filter(df.columns.contains)
+    val counts = df.agg(count(lit(1)), ids.map(c => count_if(col(c).isNull)) ++
+      Seq(count_if(badDate(col("date"))),
+        count_if(offTotal(col(totalCol), computedTotal(amountCols)))): _*)
+      .head()
+    if (counts.getLong(0) == 0L)
+      return Report(schema :+
+        CheckResult("rows/non-empty", Fatal, false, Seq("no data rows")))
+    val nulls = ids.zipWithIndex.collect {
+      case (c, i) if counts.getLong(i + 1) > 0 =>
+        s"$c has ${counts.getLong(i + 1)} nulls"
+    }
     Report(schema ++ Seq(
-      checkNotNull(df, idCols),
-      checkDateFormat(df),
-      checkTotalTolerance(df, totalCol, amountCols),
+      CheckResult("nulls/id-columns", Fatal, nulls.isEmpty, nulls),
+      if (counts.getLong(ids.size + 1) > 0) checkDateFormat(df)
+      else CheckResult("format/date", Fatal, true, Nil),
+      if (counts.getLong(ids.size + 2) > 0)
+        checkTotalTolerance(df, totalCol, amountCols)
+      else CheckResult("tolerance/total-amount", Warning, true, Nil),
       checkRemainingMonotonic(df, totalCol)))
   }
 

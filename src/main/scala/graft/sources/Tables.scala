@@ -2,7 +2,8 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.LongType
+import org.apache.spark.sql.types.{ArrayType, FloatType, IntegerType, LongType,
+  StructField, StructType}
 
 /** Loaders for the lakehouse tables the engine serves.
   *
@@ -58,7 +59,15 @@ object Tables {
       raw.withColumn("ts_ns", unix_micros(col("ts").cast("timestamp")) * 1000L)
         .withColumn("ts", timestamp_micros(expr("ts_ns DIV 1000")))
   def documents(spark: SparkSession, dir: String): DataFrame = table(spark, dir, "documents")
-  def embeddings(spark: SparkSession, dir: String): DataFrame = table(spark, dir, "embeddings")
+  /** The embeddings corpus, read with the schema its generator writes:
+    * an open runs no schema-inference job.
+    */
+  def embeddings(spark: SparkSession, dir: String): DataFrame =
+    spark.read.schema(EmbeddingsSchema).parquet(s"$dir/embeddings.parquet")
+
+  private val EmbeddingsSchema = StructType(Seq(
+    StructField("vec_id", LongType), StructField("embedding", ArrayType(FloatType)),
+    StructField("label", IntegerType)))
 
   private val rowCountCache = scala.collection.concurrent.TrieMap.empty[String, Long]
 

@@ -107,6 +107,23 @@ class LakeSpec extends AnyFunSuite {
     assert(!got.exists(_.endsWith(".crc")))
   }
 
+  test("scratchRoot: one reaper per application deletes only its own root") {
+    val name = s"reap_${System.nanoTime()}"
+    val a = LakeFs.scratchRoot(spark, name, "/x/sf0.01")
+    val b = LakeFs.scratchRoot(spark, name, "/y/sf0.1", "_t")
+    val appRoot = s"/tmp/graft_$name/${spark.sparkContext.applicationId}"
+    assert(a == s"$appRoot/sf0.01" && b == s"$appRoot/sf0.1_t")
+    val reaper = LakeFs.reapers.get(appRoot)
+    assert(reaper != null && reaper.root.toString == appRoot)
+    val other = s"/tmp/graft_$name/app-other/sf0.01"
+    Seq(a, b, other).foreach(d => fsOps.writeString(s"$d/f", "x"))
+    reaper.onApplicationEnd(
+      org.apache.spark.scheduler.SparkListenerApplicationEnd(0L))
+    assert(!fsOps.exists(appRoot))
+    assert(fsOps.exists(s"$other/f"), "another application's root was touched")
+    fsOps.delete(s"/tmp/graft_$name")
+  }
+
   test("lsRecursive: a file root lists itself, a missing root lists nothing") {
     val fs = fsOps
     val dir = markerTree(fs)
@@ -479,6 +496,18 @@ class LakeSpec extends AnyFunSuite {
     assert(v.list(2023) == ids.reverse)
     assert(v.cleanup(2023).toSet == ids.dropRight(3).toSet)
     assert(v.list(2023) == ids.reverse.take(3))
+  }
+
+  test("versioning: a multi-file snapshot records the row count a scan reads") {
+    val root = tmpDir()
+    val v = new Versioning(fsOps, spark, root)
+    val id = v.create(writeDf(23).repartition(4), 2023, "m.csv")
+    val dir = s"$root/year=2023/$id"
+    assert(fsOps.lsRecursive(dir).count(_.endsWith(".parquet")) > 1,
+      "the snapshot must span several Parquet files")
+    val scanned = spark.read.parquet(dir).count()
+    assert(scanned == 23L)
+    assert(v.metadataJson(2023, id).get.contains(s"\"row_count\":$scanned,"))
   }
 
   test("q234 backfill: stale-only rewrites, capped waves, data fixed") {

@@ -268,6 +268,135 @@ class PipelineSpec extends AnyFunSuite {
     assert(r3.warnings.map(_.name) == Seq("tolerance/total-amount"))
   }
 
+  /** The gate's fixtures, by name. Every frame has the pipeline's shape
+    * (ids `date`/`details`, `total_amount`, amounts `a`/`b`) unless the
+    * fixture is about the shape itself. The clean and header-only ones
+    * are CSV files read as the pipeline reads them; the rest are
+    * in-memory variants of the clean rows.
+    */
+  def dqFixtures(): Seq[(String, org.apache.spark.sql.DataFrame)] = {
+    import spark.implicits._
+    val cols = Seq("date", "details", "total_amount", "a", "b")
+    val clean = Seq(
+      ("all-year-budget", "budget", 1000.0, 600.0, 400.0),
+      ("2024-10", "spent", 100.0, 60.0, 40.0),
+      ("2024-10", "remaining", 900.0, 540.0, 360.0),
+      ("2024-11", "spent", 150.0, 90.0, 60.0),
+      ("2024-11", "remaining", 750.0, 450.0, 300.0),
+      ("total spent", "spent", 250.0, 150.0, 100.0),
+      ("remaining", "remaining", 750.0, 450.0, 300.0))
+    val (pipe, _, _) = setup()
+    def csv(name: String, rows: Seq[Product]): org.apache.spark.sql.DataFrame = {
+      val f = Files.createTempDirectory("graft-dq").resolve(name)
+      Files.write(f, (cols +: rows.map(_.productIterator.toSeq))
+        .map(_.mkString(",")).mkString("", "\n", "\n").getBytes("UTF-8"))
+      pipe.readWideCsv(Seq(f.toString), 2024).drop("year")
+    }
+    Seq(
+      "clean" -> csv("clean.csv", clean),
+      "null id" -> (clean :+ (("2024-12", null, 50.0, 30.0, 20.0)) :+
+        ((null, "spent", 10.0, 5.0, 5.0))).toDF(cols: _*),
+      "bad date" -> (clean ++ Seq(("13/2024", "spent", 10.0, 10.0, 0.0),
+        ("2024/12", "spent", 10.0, 10.0, 0.0),
+        ("13/2024", "spent", 20.0, 20.0, 0.0))).toDF(cols: _*),
+      "off total" -> (clean :+ (("2024-12", "spent", 200.0, 10.0, 10.0)))
+        .toDF(cols: _*),
+      "non-monotonic" -> (clean :+ (("2024-12", "remaining", 800.0, 480.0,
+        320.0))).toDF(cols: _*).withColumn("note",
+          org.apache.spark.sql.functions.lit("x")),
+      "header-only" -> csv("empty.csv", Nil),
+      "missing column" -> clean.toDF(cols: _*).drop("b"))
+  }
+
+  def runGate(df: org.apache.spark.sql.DataFrame): DataQuality.Report =
+    DataQuality.run(df, Seq("date", "details", "total_amount", "a", "b"),
+      Seq("date", "details"), "total_amount", Seq("a", "b"))
+
+  test("DQ gate reports equal the unfused gate's on every fixture, in at " +
+      "most 4 jobs when clean") {
+    import DataQuality.{CheckResult => R, Fatal, Warning}
+    val schemaOk = Seq(R("schema/missing-columns", Fatal, true, Nil),
+      R("schema/extra-columns", Warning, true, Nil))
+    def rowChecks(nulls: Seq[String] = Nil, dates: Seq[String] = Nil,
+        totals: Seq[String] = Nil, monotonic: Seq[String] = Nil) = Seq(
+      R("nulls/id-columns", Fatal, nulls.isEmpty, nulls),
+      R("format/date", Fatal, dates.isEmpty, dates),
+      R("tolerance/total-amount", Warning, totals.isEmpty, totals),
+      R("monotonic/remaining", Warning, monotonic.isEmpty, monotonic))
+    val pass = "[PASS] schema/missing-columns\n[PASS] schema/extra-columns\n"
+    // (results, render), recorded from the gate before its checks were fused
+    val recorded = Map(
+      "clean" -> (schemaOk ++ rowChecks(),
+        pass + "[PASS] nulls/id-columns\n[PASS] format/date\n" +
+          "[PASS] tolerance/total-amount\n[PASS] monotonic/remaining"),
+      "null id" -> (schemaOk ++ rowChecks(nulls = Seq("date has 1 nulls",
+        "details has 1 nulls")),
+        pass + "[FATAL] nulls/id-columns: date has 1 nulls; details has 1 " +
+          "nulls\n[PASS] format/date\n[PASS] tolerance/total-amount\n" +
+          "[PASS] monotonic/remaining"),
+      "bad date" -> (schemaOk ++ rowChecks(dates = Seq(
+        "bad date value: '13/2024'", "bad date value: '2024/12'")),
+        pass + "[PASS] nulls/id-columns\n[FATAL] format/date: bad date " +
+          "value: '13/2024'; bad date value: '2024/12'\n" +
+          "[PASS] tolerance/total-amount\n[PASS] monotonic/remaining"),
+      "off total" -> (schemaOk ++ rowChecks(totals = Seq(
+        "2024-12: declared=200.0 computed=20.0")),
+        pass + "[PASS] nulls/id-columns\n[PASS] format/date\n[WARN] " +
+          "tolerance/total-amount: 2024-12: declared=200.0 computed=20.0\n" +
+          "[PASS] monotonic/remaining"),
+      "non-monotonic" -> (Seq(schemaOk.head,
+        R("schema/extra-columns", Warning, false, Seq("extra: note"))) ++
+        rowChecks(monotonic = Seq("2024-12: 750.0 -> 800.0 increased")),
+        "[PASS] schema/missing-columns\n[WARN] schema/extra-columns: " +
+          "extra: note\n[PASS] nulls/id-columns\n[PASS] format/date\n" +
+          "[PASS] tolerance/total-amount\n[WARN] monotonic/remaining: " +
+          "2024-12: 750.0 -> 800.0 increased"),
+      "header-only" -> (schemaOk :+
+        R("rows/non-empty", Fatal, false, Seq("no data rows")),
+        pass + "[FATAL] rows/non-empty: no data rows"),
+      "missing column" -> (Seq(
+        R("schema/missing-columns", Fatal, false, Seq("missing: b")),
+        schemaOk(1)),
+        "[FATAL] schema/missing-columns: missing: b\n" +
+          "[PASS] schema/extra-columns"))
+    val fixtures = dqFixtures()
+    assert(fixtures.map(_._1).toSet == recorded.keySet)
+    fixtures.foreach { case (name, df) =>
+      val report = runGate(df)
+      assert(report.results == recorded(name)._1, name)
+      assert(report.render == recorded(name)._2, name)
+    }
+
+    // jobs launched by the gate on the clean fixture, counted by job
+    // group; a marker job flushes the listener queue (FIFO) before reading
+    val sc = spark.sparkContext
+    val gateJobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val markerSeen = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(js.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some("dq-gate") => gateJobs.incrementAndGet()
+          case Some("dq-marker") => markerSeen.countDown()
+          case _ => ()
+        }
+    }
+    val clean = fixtures.head._2
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup("dq-gate", "DQ gate, clean fixture")
+      assert(!runGate(clean).fatalFailed)
+      sc.setJobGroup("dq-marker", "listener flush")
+      sc.parallelize(Seq(1), 1).count()
+      assert(markerSeen.await(30, java.util.concurrent.TimeUnit.SECONDS))
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+    assert(gateJobs.get >= 1 && gateJobs.get <= 4,
+      s"gate launched ${gateJobs.get} jobs on the clean fixture")
+  }
+
   test("monotonic check windows per year: budget reset at the year " +
       "boundary is not a violation, an in-year increase still is") {
     import spark.implicits._
