@@ -7,9 +7,10 @@ object Bench {
     * directly comparable to earlier rounds' numbers. `warm_value`/
     * `warm_queries` is the immediate second execution, which isolates
     * data-path throughput from the ~2-4 s/query one-time plan+JIT cost
-    * measured on this host (tools/TimeLab `relational` mode) — the number
-    * that scales with data volume on a real cluster, where compilation is
-    * amortized over 1000 executors × TBs, not 60 sub-second queries.
+    * (the cold − warm gap of any query; `SPARK_GRAFT_QUERY_FILTER`
+    * isolates one) — the number that scales with data volume on a real
+    * cluster, where compilation is amortized over 1000 executors × TBs,
+    * not 60 sub-second queries.
     *
     * The measured action is a `noop`-format write, not `count()`: a
     * count lets Catalyst prune every unreferenced column, so projection-

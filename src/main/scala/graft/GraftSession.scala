@@ -30,9 +30,8 @@ object GraftSession {
       // every codegen unit — pure fixed overhead on a serving deployment
       // exactly as in the bench. 4096 entries holds the whole surface;
       // entries are weak-referenced compiled classes, small next to the
-      // driver heap. Overridable via SPARK_GRAFT_CODEGEN_CACHE.
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "4096"))
+      // driver heap.
+      .config("spark.sql.codegen.cache.maxEntries", "4096")
       // split size: at 100 TB this is the lever that keeps scan tasks
       // ~uniform and partitions within executor memory; 128m default made
       // explicit so it is tuned deliberately, not inherited

@@ -161,7 +161,7 @@ object AnnIndex {
         if (coding == Coding.PqCapped) Similarity.pqKCappedFor(nKnob)
         else Similarity.pqKFor(nKnob)
       Meta(IndexVersion, n, nlist, nprobe, ncoarse, cprobe,
-        math.max(1, nprobe / cprobe), k, fp)
+        Similarity.perCellFor(nlist), k, fp)
     }
   }
 
@@ -272,13 +272,18 @@ object AnnIndex {
       .map(r => r.getLong(0) -> r.getSeq[Float](1).toArray)
       .sortBy(_._1).toSeq
 
-  /** The committed fine centroids with their cells: (cell, f_id, emb). */
-  private def fineRows(spark: SparkSession,
-      root: String): Seq[(Long, Long, Array[Float])] =
-    modelKind(spark, root, "ivf")
+  /** The committed two-level router: the coarse centroids and the fine
+    * centroids grouped by their committed cell, each cell in id order.
+    */
+  private def readHier(spark: SparkSession, root: String): Similarity.HierModel = {
+    val rows = modelKind(spark, root, "ivf")
       .select(col("cell"), col("c_id"), col("embedding")).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getSeq[Float](2).toArray))
-      .toSeq
+    val coarse = modelLits(spark, root, "coarse")
+    Similarity.HierModel(coarse, coarse.map { case (gid, _) =>
+      rows.filter(_._1 == gid).map(t => (t._2, t._3)).sortBy(_._1).toSeq
+    })
+  }
 
   /** The committed model re-read from `root` (O(model), never the
     * corpus) — what a restarted ticker resumes from.
@@ -287,14 +292,15 @@ object AnnIndex {
       layout: Layout): Model = {
     val pq = if (layout.coded) modelLits(spark, root, "pq") else Nil
     if (!layout.hier) Model(modelLits(spark, root, "ivf"), None, pq)
-    else {
-      val rows = fineRows(spark, root)
-      val coarse = modelLits(spark, root, "coarse")
-      Model(Nil, Some(Similarity.HierModel(coarse, coarse.map { case (gid, _) =>
-        rows.filter(_._1 == gid).map(t => (t._2, t._3)).sortBy(_._1)
-      })), pq)
-    }
+    else Model(Nil, Some(readHier(spark, root)), pq)
   }
+
+  /** The committed routing at the committed probe widths. */
+  private def routing(spark: SparkSession, root: String, layout: Layout,
+      meta: Meta): Similarity.Routing =
+    if (layout.hier)
+      Similarity.Routing.TwoLevel(readHier(spark, root), meta.cprobe, meta.perCell)
+    else Similarity.Routing.Flat(modelLits(spark, root, "ivf"), meta.nprobe)
 
   /** A committed bucket-partitioned table (`members` or `codes`, by its
     * directory name), read with the schema the build writes.
@@ -307,18 +313,6 @@ object AnnIndex {
   /** Sum of a code row's eight subspace codes. */
   private def codeMass: Column =
     (0 until Similarity.PqSubspaces).map(m => col(s"code_$m")).reduce(_ + _)
-
-  /** PQ-code a routed relation (vec_id, embedding, bucket) against
-    * `pqCents` — coding off the routed rows makes "one routing pass per
-    * commit" literal. [[Similarity.withPqDistanceArrays]] only APPENDS
-    * the distance arrays; the routing columns pass through untouched.
-    */
-  private def codedFromAssigned(assigned: DataFrame,
-      pqCents: Seq[(Long, Array[Float])]): DataFrame =
-    Similarity.withPqDistanceArrays(assigned, pqCents)
-      .select(col("vec_id") +: col("bucket") +:
-        (0 until Similarity.PqSubspaces)
-          .map(m => Similarity.pqCode(m).as(s"code_$m")): _*)
 
   /** The corpus' (vec_id, embedding) rows, with the graft functions
     * (the md5 split among them) registered.
@@ -402,7 +396,7 @@ object AnnIndex {
       if (appendLaw) df.repartition(col("bucket")) else df, table, "bucket")
     Par.triple(
       commit(members, membersDir(root)),
-      if (layout.coded) commit(codedFromAssigned(members, model.pq), codesDir(root))
+      if (layout.coded) commit(Similarity.pqCoded(members, model.pq), codesDir(root))
       else Map.empty,
       writer.commitPartitioned(modelRows(spark, model), modelDir(root), "kind"))
     cached.foreach(_.unpersist())
@@ -483,84 +477,40 @@ object AnnIndex {
     panel(spark, layout.root(spark, dir), layout, commitFull(spark, dir, layout),
       probe = true)
 
-  /** The committed fine centroids as a broadcastable (cell, f_id, f_emb)
-    * relation — the per-cell fine selection of a two-level probe.
-    */
-  private def fineByCell(spark: SparkSession, root: String): DataFrame = {
-    import spark.implicits._
-    fineRows(spark, root).map { case (c, f, e) => (c, f, e.toSeq) }
-      .toDF("cell", "f_id", "f_emb")
-  }
-
   /** q245 / q257 / q261: the exact-cosine IVF search served FROM the
     * committed members — hash-equal to the live q106 (flat) or q254
-    * (two-level) by construction, since the committed routing is
-    * byte-identical to the live one. Probes come off the committed
-    * model (flat: the nprobe best centroids; two-level: the cprobe best
-    * coarse cells, then the perCell best fine centroids in each),
-    * candidates off the bucket-partitioned members, and the corpus is
-    * touched only for the query subset: the plan carries zero corpus
+    * (two-level) by construction: the committed routing is
+    * byte-identical to the live one, and both run the one
+    * [[Similarity.exactSearch]] with the probes off the committed model.
+    * Candidates come off the bucket-partitioned members, and the corpus
+    * is touched only for the query subset: the plan carries zero corpus
     * assignment.
     */
   def serve(spark: SparkSession, dir: String, layout: Layout): DataFrame = {
     Similarity.withFns(spark)
     val meta = ensure(spark, dir, layout)
     val root = layout.root(spark, dir)
-    val q = Similarity.queries(Tables.embeddings(spark, dir))
-      .withColumn("n_q", Similarity.normQ("q_emb"))
-    def top(cents: Seq[(Long, Array[Float])], width: Int, as: String) = q
-      .select(col("q_id"), col("q_emb"), col("n_q"),
-        explode(slice(sort_array(Similarity.probeRanking(cents, "q_emb")),
-          1, width)).as("p"))
-      .select(col("q_id"), col("q_emb"), col("n_q"), col("p.c_id").as(as))
-    val probes =
-      if (!layout.hier) top(modelLits(spark, root, "ivf"), meta.nprobe, "bucket")
-      else {
-        val coarse = modelLits(spark, root, "coarse")
-        val wQC = org.apache.spark.sql.expressions.Window
-          .partitionBy(col("q_id"), col("cell"))
-        top(coarse, meta.cprobe, "cell")
-          .join(broadcast(fineByCell(spark, root)), Seq("cell"))
-          .withColumn("fdot", Similarity.dotQ("q_emb", "f_emb"))
-          .withColumn("rk", row_number().over(
-            wQC.orderBy(col("fdot").desc, col("f_id").asc)))
-          .filter(col("rk") <= meta.perCell)
-          .select(col("q_id"), col("q_emb"), col("n_q"), col("f_id").as("bucket"))
-      }
-    val candidates = bucketTable(spark, membersDir(root))
-      .join(broadcast(probes), Seq("bucket"))
-      .filter(col("vec_id") =!= col("q_id"))
-      .withColumn("n_emb", Similarity.normQ("embedding"))
-      .withColumn("dot_q", Similarity.dotQ("q_emb", "embedding"))
-      .withColumn("cos_ppm", expr(
-        "CAST(floor(CAST(dot_q AS DOUBLE) * 1000000.0 / " +
-          "(sqrt(CAST(n_q AS DOUBLE)) * sqrt(CAST(n_emb AS DOUBLE)))) AS BIGINT)"))
-    Similarity.topkPerQuery(candidates, "cos_ppm", 5)
+    Similarity.exactSearch(bucketTable(spark, membersDir(root)),
+      Similarity.queries(Tables.embeddings(spark, dir)),
+      routing(spark, root, layout, meta))
   }
 
   /** q246 / q263 / q276: the ADC search served FROM the committed 8-byte
     * code rows (the 100 TB read-3-TB-not-100 property, without the
-    * per-invocation coding pass) — the ONE flat ADC pipeline
-    * ([[Similarity.adcSearch]], hash-equal to the live q108) or the
-    * two-level one ([[Similarity.hierAdcSearch]], hash-equal to the
-    * live rebalanced/capped twins), with the candidate side swapped for
-    * the committed codes and the model read off the artifact. At the
-    * capped width the per-query LUT is 8·k_cap·8 bytes, constant in N.
+    * per-invocation coding pass) — the one [[Similarity.adcSearch]],
+    * hash-equal to the live q108 (flat) or the live rebalanced/capped
+    * twins (two-level), with the candidate side swapped for the
+    * committed codes and the model read off the artifact. At the capped
+    * width the per-query LUT is 8·k_cap·8 bytes, constant in N.
     */
   def serveCodes(spark: SparkSession, dir: String, layout: Layout): DataFrame = {
     Similarity.withFns(spark)
     val meta = ensure(spark, dir, layout)
     val root = layout.root(spark, dir)
-    val codes = bucketTable(spark, codesDir(root))
-    val q = Similarity.queries(Tables.embeddings(spark, dir))
-    val budget = meta.n / 100L + 1L
-    if (!layout.hier)
-      Similarity.adcSearch(codes, q, modelLits(spark, root, "ivf"),
-        modelLits(spark, root, "pq"), meta.nprobe, meta.k, budget)
-    else
-      Similarity.hierAdcSearch(codes, q, modelLits(spark, root, "coarse"),
-        fineByCell(spark, root), modelLits(spark, root, "pq"),
-        meta.cprobe, meta.perCell, meta.k, budget)
+    Similarity.adcSearch(bucketTable(spark, codesDir(root)),
+      Similarity.queries(Tables.embeddings(spark, dir)),
+      routing(spark, root, layout, meta), modelLits(spark, root, "pq"),
+      meta.k, meta.n / 100L + 1L)
   }
 
   /** q247: the staleness handoff between the committed flat artifact
@@ -642,7 +592,7 @@ object AnnIndex {
     // disjoint tables sharing only the persisted dm — overlapped
     val (nRewritten, _) = Par.pair(
       upsert(membersDir(root), dm),
-      if (model.pq.nonEmpty) upsert(codesDir(root), codedFromAssigned(dm, model.pq))
+      if (model.pq.nonEmpty) upsert(codesDir(root), Similarity.pqCoded(dm, model.pq))
       else 0L)
     dm.unpersist()
     (nArr, touched.length.toLong, nRewritten)
@@ -755,7 +705,7 @@ object AnnIndex {
     // per-table chains share only the persisted dm — overlapped
     val (nAppended, nCodeAppended) = Par.pair(
       append(membersDir(root), dm),
-      if (coded) append(codesDir(root), codedFromAssigned(dm, model.pq)) else 0L)
+      if (coded) append(codesDir(root), Similarity.pqCoded(dm, model.pq)) else 0L)
     dm.unpersist()
     def compactOver(table: String): (Seq[Long], Long) = {
       val over = bucketFileCounts(lakeFs, table)

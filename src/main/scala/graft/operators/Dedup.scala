@@ -424,9 +424,8 @@ object Dedup {
     val a = e.select(col("vec_id").as("id_a"), col("embedding").as("emb_a"), col("nq").as("n_a"))
     val b = e.select(col("vec_id").as("id_b"), col("embedding").as("emb_b"), col("nq").as("n_b"))
     a.join(b, col("id_a") < col("id_b"))
-      .withColumn("cos_ppm", expr(
-        s"CAST(floor(CAST($dot(emb_a, emb_b) AS DOUBLE) * 1000000.0 / " +
-          "(sqrt(CAST(n_a AS DOUBLE)) * sqrt(CAST(n_b AS DOUBLE)))) AS BIGINT)"))
+      .withColumn("cos_ppm",
+        Similarity.cosPpm(s"$dot(emb_a, emb_b)", "n_a", "n_b"))
       .filter(col("cos_ppm") >= EmbNearDupPpm)
       .select(col("id_a"), col("id_b"), col("cos_ppm"))
   }
@@ -466,9 +465,8 @@ object Dedup {
       col("embedding").as("emb_b"), col("nq").as("n_b"))
     a.join(b, Seq("bucket"))
       .filter(col("id_a") < col("id_b"))
-      .withColumn("cos_ppm", expr(
-        s"CAST(floor(CAST($dot(emb_a, emb_b) AS DOUBLE) * 1000000.0 / " +
-          "(sqrt(CAST(n_a AS DOUBLE)) * sqrt(CAST(n_b AS DOUBLE)))) AS BIGINT)"))
+      .withColumn("cos_ppm",
+        Similarity.cosPpm(s"$dot(emb_a, emb_b)", "n_a", "n_b"))
       .filter(col("cos_ppm") >= EmbNearDupPpm)
       .select(col("id_a"), col("id_b"), col("cos_ppm"))
   }

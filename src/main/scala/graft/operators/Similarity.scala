@@ -29,10 +29,35 @@ object Similarity {
     * primitive loop in whole-stage codegen instead of an interpreted
     * lambda per element).
     */
-  private[operators] def dotQ(a: String, b: String): Column =
+  private def dotQ(a: String, b: String): Column =
     expr(s"${graft.functions.GraftFunctions.DotName}($a, $b)")
 
-  private[operators] def normQ(a: String): Column = dotQ(a, a)
+  private def normQ(a: String): Column = dotQ(a, a)
+
+  /** Exact quantized cosine in ppm, ⌊dot·10⁶ / (√n_a·√n_b)⌋, over a
+    * quantized dot and the two quantized squared norms, each given as a
+    * SQL expression (a column name or a call). The one cosine formula of
+    * every search, panel and pair check; the oracle replays it.
+    */
+  private[operators] def cosPpm(dot: String, na: String, nb: String): Column =
+    expr(s"CAST(floor(CAST($dot AS DOUBLE) * 1000000.0 / " +
+      s"(sqrt(CAST($na AS DOUBLE)) * sqrt(CAST($nb AS DOUBLE)))) AS BIGINT)")
+
+  /** The exact scorer: `dot_q` and `cos_ppm` of every (query, candidate)
+    * row, which carries `q_emb`/`n_q` and `embedding`/`n_emb`.
+    */
+  private def cosineScored(pairs: DataFrame): DataFrame =
+    pairs.withColumn("dot_q", dotQ("q_emb", "embedding"))
+      .withColumn("cos_ppm", cosPpm("dot_q", "n_q", "n_emb"))
+
+  /** Every (query, corpus row) pair but the query itself, scored
+    * exactly: the query set `q(q_id, q_emb, …)` broadcast against a full
+    * scan of `emb(vec_id, embedding, …)`, so the corpus never shuffles.
+    */
+  private def bruteScored(emb: DataFrame, q: DataFrame): DataFrame =
+    cosineScored(emb.withColumn("n_emb", normQ("embedding"))
+      .join(broadcast(q.withColumn("n_q", normQ("q_emb"))),
+        col("vec_id") =!= col("q_id")))
 
   private[operators] def withFns(spark: SparkSession): Unit =
     graft.functions.GraftFunctions.ensureRegistered(spark)
@@ -71,17 +96,10 @@ object Similarity {
     * cannot drift between the graded baseline and its consumers.
     */
   private def bruteTop5For(emb0: DataFrame, q0: DataFrame): DataFrame = {
-    val emb = emb0
-      .select(col("vec_id"), col("embedding"), normQ("embedding").as("n_emb"))
-    val q = q0.select(col("q_id"), col("q_emb"))
-      .withColumn("n_q", normQ("q_emb"))
-    val scored = emb.join(broadcast(q), col("vec_id") =!= col("q_id"))
-      .withColumn("dot_q", dotQ("q_emb", "embedding"))
-      .withColumn("cos_ppm", expr(
-        "CAST(floor(CAST(dot_q AS DOUBLE) * 1000000.0 / (sqrt(CAST(n_q AS DOUBLE)) * sqrt(CAST(n_emb AS DOUBLE)))) AS BIGINT)"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("q_id")).orderBy(col("cos_ppm").desc, col("vec_id").asc)
-    scored
+    val w = Window.partitionBy(col("q_id"))
+      .orderBy(col("cos_ppm").desc, col("vec_id").asc)
+    bruteScored(emb0.select(col("vec_id"), col("embedding")),
+        q0.select(col("q_id"), col("q_emb")))
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= 5)
       .select(col("q_id"), col("vec_id").as("neighbor_id"), col("cos_ppm"), col("rank"))
@@ -101,19 +119,27 @@ object Similarity {
   def hardNegativeMining(spark: SparkSession, dir: String): DataFrame = {
     withFns(spark)
     val emb = Tables.embeddings(spark, dir)
-      .select(col("vec_id"), col("embedding"), col("label"),
-        normQ("embedding").as("n_emb"))
-    val q = Tables.embeddings(spark, dir)
-      .filter(col("vec_id") % 100 === 0)
+    positiveNegative(bruteScored(
+      emb.select(col("vec_id"), col("embedding"), col("label")),
+      labelledQueries(emb)))
+  }
+
+  /** The every-100th query subset with its label: (q_id, q_emb, q_label). */
+  private def labelledQueries(emb: DataFrame): DataFrame =
+    emb.filter(col("vec_id") % 100 === 0)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
-        col("label").as("q_label"), normQ("embedding").as("n_q"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("q_id"), col("same"))
+        col("label").as("q_label"))
+
+  /** The mining tail of q118/q120 over scored (query, candidate) rows
+    * carrying `label` and `q_label`: one window over the (q_id,
+    * same-label) key picks the best candidate of each class by
+    * (cos_ppm desc, vec_id asc), then one row per query with the
+    * positive, the hard negative and their margin.
+    */
+  private def positiveNegative(scored: DataFrame): DataFrame = {
+    val w = Window.partitionBy(col("q_id"), col("same"))
       .orderBy(col("cos_ppm").desc, col("vec_id").asc)
-    emb.join(broadcast(q), col("vec_id") =!= col("q_id"))
-      .withColumn("dot_q", dotQ("q_emb", "embedding"))
-      .withColumn("cos_ppm", expr(
-        "CAST(floor(CAST(dot_q AS DOUBLE) * 1000000.0 / (sqrt(CAST(n_q AS DOUBLE)) * sqrt(CAST(n_emb AS DOUBLE)))) AS BIGINT)"))
+    scored
       .withColumn("same",
         when(col("label") === col("q_label"), 1L).otherwise(0L))
       .withColumn("rn", row_number().over(w))
@@ -142,35 +168,9 @@ object Similarity {
     withFns(spark)
     val emb = Tables.embeddings(spark, dir)
     val cents = centroidLits(spark, dir, IvfNlist)
-    val q = emb.filter(col("vec_id") % 100 === 0)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
-        col("label").as("q_label"), normQ("embedding").as("n_q"))
-    val probes = q
-      .select(col("q_id"), col("q_emb"), col("q_label"), col("n_q"),
-        explode(slice(sort_array(probeRanking(cents, "q_emb")), 1, IvfNprobe)).as("p"))
-      .select(col("q_id"), col("q_emb"), col("q_label"), col("n_q"),
-        col("p.c_id").as("bucket"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("q_id"), col("same"))
-      .orderBy(col("cos_ppm").desc, col("vec_id").asc)
-    withBucket(emb, cents, "embedding")
-      .join(broadcast(probes), Seq("bucket"))
-      .filter(col("vec_id") =!= col("q_id"))
-      .withColumn("n_emb", normQ("embedding"))
-      .withColumn("dot_q", dotQ("q_emb", "embedding"))
-      .withColumn("cos_ppm", expr(
-        "CAST(floor(CAST(dot_q AS DOUBLE) * 1000000.0 / (sqrt(CAST(n_q AS DOUBLE)) * sqrt(CAST(n_emb AS DOUBLE)))) AS BIGINT)"))
-      .withColumn("same",
-        when(col("label") === col("q_label"), 1L).otherwise(0L))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
-      .groupBy(col("q_id"))
-      .agg(
-        max(when(col("same") === 1, col("vec_id"))).as("pos_id"),
-        max(when(col("same") === 1, col("cos_ppm"))).as("pos_cos_ppm"),
-        max(when(col("same") === 0, col("vec_id"))).as("neg_id"),
-        max(when(col("same") === 0, col("cos_ppm"))).as("neg_cos_ppm"))
-      .withColumn("margin_ppm", col("pos_cos_ppm") - col("neg_cos_ppm"))
+    val q = labelledQueries(emb).withColumn("n_q", normQ("q_emb"))
+    positiveNegative(exactCandidates(withBucket(emb, cents, "embedding"),
+      probe(q, Routing.Flat(cents, IvfNprobe), q.columns.toSeq)))
   }
 
   /** Mining agreement audit (q121) — the q90-style audit for the
@@ -205,19 +205,8 @@ object Similarity {
   def bruteForceKnnAgg(spark: SparkSession, dir: String): DataFrame = {
     withFns(spark)
     val emb = Tables.embeddings(spark, dir)
-      .select(col("vec_id"), col("embedding"), normQ("embedding").as("n_emb"))
-    val q = queries(Tables.embeddings(spark, dir))
-      .withColumn("n_q", normQ("q_emb"))
-    emb.join(broadcast(q), col("vec_id") =!= col("q_id"))
-      .withColumn("dot_q", dotQ("q_emb", "embedding"))
-      .withColumn("cos_ppm", expr(
-        "CAST(floor(CAST(dot_q AS DOUBLE) * 1000000.0 / (sqrt(CAST(n_q AS DOUBLE)) * sqrt(CAST(n_emb AS DOUBLE)))) AS BIGINT)"))
-      .groupBy(col("q_id"))
-      .agg(expr(s"${graft.functions.GraftFunctions.TopKName}(cos_ppm, vec_id, 5)")
-        .as("top"))
-      .select(col("q_id"), posexplode(col("top")))
-      .select(col("q_id"), col("col.id").as("neighbor_id"),
-        col("col.score").as("cos_ppm"), (col("pos") + 1).cast("int").as("rank"))
+    topkPerQuery(bruteScored(emb.select(col("vec_id"), col("embedding")),
+      queries(emb)), "cos_ppm", 5)
   }
 
   val IvfNlist = 16
@@ -335,7 +324,7 @@ object Similarity {
     * native [[graft.functions.QuantizedDotTable]] zipped with centroid
     * ids into (−dot, c_id) structs, ready for `sort_array` + `slice`.
     */
-  private[operators] def probeRanking(cents: Seq[(Long, Array[Float])], embCol: String): Column =
+  private def probeRanking(cents: Seq[(Long, Array[Float])], embCol: String): Column =
     zip_with(
       call_function(graft.functions.GraftFunctions.DotTableName,
         col(embCol), centMatrixLit(cents)),
@@ -435,26 +424,83 @@ object Similarity {
     withFns(spark)
     val emb = Tables.embeddings(spark, dir)
     val cents = centroidLits(spark, dir, nlist)
-    val qBase = queryBudget.fold(queries(emb))(b => queriesBudget(emb, b))
-    val q = qBase.withColumn("n_q", normQ("q_emb"))
-    // probe selection is map-only too: one native dot-table against the
-    // centroid matrix, ranked by sort_array over (−dot, c_id) structs —
-    // dot DESC then c_id ASC, the same order the oracle's ROW_NUMBER
-    // uses. zip_with runs over the tiny query side only; plan size is
-    // O(1) in nlist.
-    val probeStructs = probeRanking(cents, "q_emb")
-    val probes = q
-      .select(col("q_id"), col("q_emb"), col("n_q"),
-        explode(slice(sort_array(probeStructs), 1, nprobe)).as("p"))
-      .select(col("q_id"), col("q_emb"), col("n_q"), col("p.c_id").as("bucket"))
-    val candidates = assignedEmbeddingsFor(spark, dir, nlist)
-      .join(broadcast(probes), Seq("bucket"))
+    exactSearch(assignedEmbeddingsFor(spark, dir, nlist),
+      queryBudget.fold(queries(emb))(b => queriesBudget(emb, b)),
+      Routing.Flat(cents, nprobe))
+  }
+
+  /** How an IVF index routes a query to buckets: flat (the `nprobe`
+    * best of `cents`) or two-level (the `cprobe` best coarse cells of
+    * `model`, then the `perCell` best fine centroids in each).
+    */
+  private[operators] sealed trait Routing
+  private[operators] object Routing {
+    final case class Flat(cents: Seq[(Long, Array[Float])], nprobe: Int)
+        extends Routing
+    final case class TwoLevel(model: HierModel, cprobe: Int, perCell: Int)
+        extends Routing
+  }
+
+  /** The `width` best centroids of `cents` for the query column `q_emb`,
+    * best first: (−dot, c_id) structs sorted ascending, i.e. dot DESC
+    * then c_id ASC, the order the oracle's ROW_NUMBER uses. The native
+    * dot-table runs over the tiny query side only; plan size is O(1) in
+    * the index width.
+    */
+  private def probeList(cents: Seq[(Long, Array[Float])], width: Int): Column =
+    slice(sort_array(probeRanking(cents, "q_emb")), 1, width)
+
+  /** The probe step of every IVF search: each row of `q` (which holds
+    * `q_emb`) fans out to its probed buckets as (`carry`…, bucket). The
+    * two-level step ranks the fine centroids of the probed cells only,
+    * through a broadcast join against the nlist-row model relation and
+    * one (q_id, cell) window, by (dot desc, f_id asc); the corpus is
+    * never touched.
+    */
+  private[operators] def probe(q: DataFrame, r: Routing,
+      carry: Seq[String]): DataFrame = {
+    def top(cents: Seq[(Long, Array[Float])], width: Int, keep: Seq[String],
+        as: String) =
+      q.select(keep.map(col) :+ explode(probeList(cents, width)).as("p"): _*)
+        .select(keep.map(col) :+ col("p.c_id").as(as): _*)
+    r match {
+      case Routing.Flat(cents, nprobe) => top(cents, nprobe, carry, "bucket")
+      case Routing.TwoLevel(m, cprobe, perCell) =>
+        val wQC = Window.partitionBy(col("q_id"), col("cell"))
+        top(m.coarse, cprobe, (carry :+ "q_emb").distinct, "cell")
+          .join(broadcast(fineByCell(q.sparkSession, m)), Seq("cell"))
+          .withColumn("fdot", dotQ("q_emb", "f_emb"))
+          .withColumn("rk", row_number().over(
+            wQC.orderBy(col("fdot").desc, col("f_id").asc)))
+          .filter(col("rk") <= perCell)
+          .select(carry.map(col) :+ col("f_id").as("bucket"): _*)
+    }
+  }
+
+  /** Candidate generation: the corpus rows (vec_id, bucket, …) in each
+    * query's probed buckets, the query itself excluded. The probes
+    * broadcast; the corpus is never shuffled.
+    */
+  private def candidates(corpus: DataFrame, probes: DataFrame): DataFrame =
+    corpus.join(broadcast(probes), Seq("bucket"))
       .filter(col("vec_id") =!= col("q_id"))
-      .withColumn("n_emb", normQ("embedding"))
-      .withColumn("dot_q", dotQ("q_emb", "embedding"))
-      .withColumn("cos_ppm", expr(
-        "CAST(floor(CAST(dot_q AS DOUBLE) * 1000000.0 / (sqrt(CAST(n_q AS DOUBLE)) * sqrt(CAST(n_emb AS DOUBLE)))) AS BIGINT)"))
-    topkPerQuery(candidates, "cos_ppm", 5)
+
+  /** Candidates over `embedding`, scored exactly against probes that
+    * carry `q_emb` and `n_q`.
+    */
+  private def exactCandidates(corpus: DataFrame, probes: DataFrame): DataFrame =
+    cosineScored(candidates(corpus, probes)
+      .withColumn("n_emb", normQ("embedding")))
+
+  /** The exact IVF search, probe → quantized cosine → top-5, over a
+    * routed corpus (vec_id, embedding, bucket): the live searches route
+    * the corpus now, the served ones read the committed members.
+    */
+  private[operators] def exactSearch(corpus: DataFrame, q: DataFrame,
+      r: Routing): DataFrame = {
+    val qn = q.withColumn("n_q", normQ("q_emb"))
+    topkPerQuery(exactCandidates(corpus, probe(qn, r, qn.columns.toSeq)),
+      "cos_ppm", 5)
   }
 
   /** Final per-query top-k via the bounded aggregate (q123's physics):
@@ -464,7 +510,7 @@ object Similarity {
     * results by the shared total order (score desc — or asc when
     * `asc` — then lowest vec_id); the graded oracles are unchanged.
     */
-  private[operators] def topkPerQuery(df: DataFrame, scoreCol: String, k: Int,
+  private def topkPerQuery(df: DataFrame, scoreCol: String, k: Int,
       asc: Boolean = false): DataFrame = {
     val scoreExpr = if (asc) s"-$scoreCol" else scoreCol
     df.groupBy(col("q_id"))
@@ -520,10 +566,10 @@ object Similarity {
       // centroid) makes the cosine 0/0 → Infinity, and the ANSI CAST to
       // BIGINT aborts; NULL matches what the oracle computes under the
       // same guard
-      .withColumn("shift_cos_ppm", expr(
-        "CASE WHEN norm_new_q = 0 OR norm_old_q = 0 THEN NULL " +
-          "ELSE CAST(floor(CAST(dot_q AS DOUBLE) * 1000000.0 / " +
-          "(sqrt(CAST(norm_new_q AS DOUBLE)) * sqrt(CAST(norm_old_q AS DOUBLE)))) AS BIGINT) END"))
+      .withColumn("shift_cos_ppm",
+        when(col("norm_new_q") === 0 || col("norm_old_q") === 0,
+          lit(null).cast("bigint"))
+          .otherwise(cosPpm("dot_q", "norm_new_q", "norm_old_q")))
       .select(col("bucket"), col("n_vecs"), col("norm_new_q"), col("shift_cos_ppm"))
   }
 
@@ -768,9 +814,7 @@ object Similarity {
       .orderBy(col("cos_ppm").desc, col("nbr"))
     a.join(b, Seq("bucket"))
       .filter(col("vec_id") =!= col("nbr"))
-      .withColumn("cos_ppm", expr(
-        s"CAST(floor(CAST($dot(emb_a, emb_b) AS DOUBLE) * 1000000.0 / " +
-          "(sqrt(CAST(n_a AS DOUBLE)) * sqrt(CAST(n_b AS DOUBLE)))) AS BIGINT)"))
+      .withColumn("cos_ppm", cosPpm(s"$dot(emb_a, emb_b)", "n_a", "n_b"))
       .withColumn("rk", row_number().over(wNn))
       .filter(col("rk") === 1)
       .select(col("vec_id"), col("label_true"), col("label_pred"),
@@ -972,20 +1016,15 @@ object Similarity {
     val cents = centroidLits(spark, dir, nlist)
     val qBase = queryBudget.fold(queries(emb))(b => queriesBudget(emb, b))
     val q = qBase.withColumn("n_q", normQ("q_emb"))
+    // the flat probe list with each probe's rank kept: every sweep point
+    // filters the one scored relation by rank, so the probe step here
+    // posexplodes where the shared one explodes
     val probes = q
       .select(col("q_id"), col("q_emb"), col("n_q"),
-        posexplode(slice(sort_array(probeRanking(cents, "q_emb")), 1, maxP))
-          .as(Seq("ppos", "p")))
+        posexplode(probeList(cents, maxP)).as(Seq("ppos", "p")))
       .select(col("q_id"), col("q_emb"), col("n_q"),
         col("p.c_id").as("bucket"), (col("ppos") + 1).as("probe_rank"))
-    val scored = assignedEmbeddingsFor(spark, dir, nlist)
-      .join(broadcast(probes), Seq("bucket"))
-      .filter(col("vec_id") =!= col("q_id"))
-      .withColumn("n_emb", normQ("embedding"))
-      .withColumn("dot_q", dotQ("q_emb", "embedding"))
-      .withColumn("cos_ppm", expr(
-        "CAST(floor(CAST(dot_q AS DOUBLE) * 1000000.0 / " +
-          "(sqrt(CAST(n_q AS DOUBLE)) * sqrt(CAST(n_emb AS DOUBLE)))) AS BIGINT)"))
+    val scored = exactCandidates(assignedEmbeddingsFor(spark, dir, nlist), probes)
       .select(col("q_id"), col("vec_id"), col("cos_ppm"), col("probe_rank"))
       .persist(StorageLevel.MEMORY_AND_DISK)
     // brute truth over the SAME query set, via the ONE shared ranking
@@ -1069,10 +1108,8 @@ object Similarity {
     assigned
       .withColumn("n_v", expr(s"$dot(embedding, embedding)"))
       .join(broadcast(centsDf), Seq("bucket"))
-      .withColumn("cos_ppm", expr(
-        s"CAST(floor(CAST($dot(embedding, c_emb) AS DOUBLE) * 1000000.0 / " +
-          s"(sqrt(CAST(n_v AS DOUBLE)) * " +
-          s"sqrt(CAST($dot(c_emb, c_emb) AS DOUBLE)))) AS BIGINT)"))
+      .withColumn("cos_ppm",
+        cosPpm(s"$dot(embedding, c_emb)", "n_v", s"$dot(c_emb, c_emb)"))
       .withColumn("rn", row_number().over(
         wB.orderBy(col("cos_ppm").asc, col("vec_id").asc)))
       .withColumn("n_bucket", count(lit(1)).over(wB))
@@ -1211,7 +1248,7 @@ object Similarity {
     * `array_position(d, array_min(d)) - 1` IS the argmin code with the
     * oracle's first-lowest-id tie-break.
     */
-  private[operators] def withPqDistanceArrays(df: DataFrame,
+  private def withPqDistanceArrays(df: DataFrame,
       cents: Seq[(Long, Array[Float])]): DataFrame = {
     val l2t = graft.functions.GraftFunctions.L2TableName
     val dArrs = (0 until PqSubspaces).map { m =>
@@ -1222,7 +1259,7 @@ object Similarity {
     df.select(col("*") +: dArrs: _*)
   }
 
-  private[operators] def pqCode(m: Int): Column =
+  private def pqCode(m: Int): Column =
     array_position(col(s"d_$m"), array_min(col(s"d_$m"))) - 1
 
   def pqCodes(spark: SparkSession, dir: String): DataFrame =
@@ -1419,13 +1456,21 @@ object Similarity {
     withFns(spark)
     val ivfCents = centroidLits(spark, dir, nlist)
     val pqCents = centroidLits(spark, dir, k)
-    withPqDistanceArrays(
-      withBucket(Tables.embeddings(spark, dir), ivfCents, "embedding")
-        .select(col("vec_id"), col("embedding"), col("bucket")),
-      pqCents)
+    pqCoded(withBucket(Tables.embeddings(spark, dir), ivfCents, "embedding")
+      .select(col("vec_id"), col("embedding"), col("bucket")), pqCents)
+  }
+
+  /** PQ-code a routed relation (vec_id, embedding, bucket) against
+    * `pqCents` into (vec_id, bucket, code_0..7) — coding off the routed
+    * rows makes "one routing pass per commit" literal.
+    * [[withPqDistanceArrays]] only APPENDS the distance arrays; the
+    * routing columns pass through untouched.
+    */
+  private[operators] def pqCoded(routed: DataFrame,
+      pqCents: Seq[(Long, Array[Float])]): DataFrame =
+    withPqDistanceArrays(routed, pqCents)
       .select(col("vec_id") +: col("bucket") +:
         (0 until PqSubspaces).map(m => pqCode(m).as(s"code_$m")): _*)
-  }
 
   /** IVF-PQ asymmetric-distance search (q83) — the full canonical
     * 100 TB ANN query: queries probe their [[IvfNprobe]] best IVF
@@ -1510,17 +1555,19 @@ object Similarity {
     // query count for the slice rule — footer metadata, never a scan
     val nQ = queryBudget.getOrElse(
       Tables.rowCountFromFooters(spark, dir, "embeddings") / 100L + 1L)
-    adcSearch(corpus, qAll, ivfCents, pqCents, nprobe, k, nQ)
+    adcSearch(corpus, qAll, Routing.Flat(ivfCents, nprobe), pqCents, k, nQ)
   }
 
-  /** The shared ADC pipeline over an explicit coded-corpus relation —
-    * used by the live q83/q108 search above and the committed-artifact
-    * serve path ([[AnnIndex]]), so the broadcast layout and the slice
-    * rule cannot drift between them.
+  /** The ADC search, probe → LUT sum → top-5, over an explicit
+    * coded-corpus relation (vec_id, bucket, code_0..7) and either
+    * routing: the live q83/q108 and rebalanced/capped twins code the
+    * corpus now, the committed-artifact serves ([[AnnIndex]]) read the
+    * committed codes, so the broadcast layout and the slice rule cannot
+    * drift between them.
     */
   private[operators] def adcSearch(corpus: DataFrame, qAll: DataFrame,
-      ivfCents: Seq[(Long, Array[Float])], pqCents: Seq[(Long, Array[Float])],
-      nprobe: Int, k: Int, nQueries: Long): DataFrame = {
+      r: Routing, pqCents: Seq[(Long, Array[Float])], k: Int,
+      nQueries: Long): DataFrame = {
     // ADC lookup tables: lut_m[c+1] = ‖q_sub_m − c_{m,c}‖²_q — one
     // native L2-table expression per subspace against the subspace
     // codebook matrix, computed once per QUERY (keyed by q_id; the
@@ -1534,20 +1581,13 @@ object Similarity {
       element_at(col(s"lut_$m"), (col(s"code_$m") + 1).cast("int"))
     }.reduce(_ + _)
     def sliceTopk(cand0: DataFrame, q: DataFrame): DataFrame = {
-      val probes = q
-        .select(col("q_id"),
-          explode(slice(sort_array(probeRanking(ivfCents, "q_emb")),
-            1, nprobe)).as("p"))
-        .select(col("q_id"), col("p.c_id").as("bucket"))
       val qlut = q.select(col("q_id") +: lutCols: _*)
       // candidates: codes ⋈ broadcast probes on bucket, then the ADC is
       // 8 array lookups against the broadcast per-query LUTs —
       // element_at is 1-based, codes are codebook ids 0..k−1
-      val candidates = cand0.join(broadcast(probes), Seq("bucket"))
-        .filter(col("vec_id") =!= col("q_id"))
+      topkPerQuery(candidates(cand0, probe(q, r, Seq("q_id")))
         .join(broadcast(qlut), Seq("q_id"))
-        .withColumn("adc_q", adc)
-      topkPerQuery(candidates, "adc_q", 5, asc = true)
+        .withColumn("adc_q", adc), "adc_q", 5, asc = true)
     }
     val s = lutSlices(nQueries, k)
     if (s == 1) sliceTopk(corpus, qAll)
@@ -1664,9 +1704,9 @@ object Similarity {
       // zero-norm guard: a degenerate all-zero embedding must yield NULL,
       // not an ANSI overflow abort from casting Infinity (same guard as
       // the q76 centroid shift — the r5-ADVICE failure class)
-      .withColumn("cos_ppm", expr(
-        "CASE WHEN n_a = 0 OR n_b = 0 THEN CAST(NULL AS BIGINT) " +
-          "ELSE CAST(floor(CAST(dot_q AS DOUBLE) * 1000000.0 / (sqrt(CAST(n_a AS DOUBLE)) * sqrt(CAST(n_b AS DOUBLE)))) AS BIGINT) END"))
+      .withColumn("cos_ppm",
+        when(col("n_a") === 0 || col("n_b") === 0, lit(null).cast("bigint"))
+          .otherwise(cosPpm("dot_q", "n_a", "n_b")))
       .withColumn("semantic_agree", col("cos_ppm") >= lit(SemAgreePpm))
       .select(col("doc_a"), col("doc_b"), col("cos_ppm"), col("semantic_agree"))
   }
@@ -1871,44 +1911,32 @@ object Similarity {
   def hierIvfSearch(spark: SparkSession, dir: String): DataFrame = {
     withFns(spark)
     val nlist = nlistFor(Tables.rowCountFromFooters(spark, dir, "embeddings"))
-    val ncoarse = ncoarseFor(nlist)
-    val m = hierModelFor(centroidLits(spark, dir, nlist), ncoarse)
-    val cprobe = cprobeFor(ncoarse)
-    val perCell = math.max(1, nprobeFor(nlist) / cprobe)
+    val m = hierModel(spark, dir)
     val emb = Tables.embeddings(spark, dir)
-    val q = queries(emb).withColumn("n_q", normQ("q_emb"))
-    // query-side cell ranking: the same sort_array((−dot, id)) order the
-    // oracle's ROW_NUMBER replays, over the N^(1/4)-row coarse matrix
-    val cellProbes = q
-      .select(col("q_id"), col("q_emb"), col("n_q"),
-        explode(slice(sort_array(probeRanking(m.coarse, "q_emb")), 1, cprobe))
-          .as("p"))
-      .select(col("q_id"), col("q_emb"), col("n_q"), col("p.c_id").as("cell"))
-    // the model as a relation (cell, f_id, f_emb) — nlist rows, joined
-    // ONLY against the tiny probed-cells set, never the corpus
-    val fineByCell = {
-      import spark.implicits._
-      m.cells.zipWithIndex.flatMap { case (cell, ci) =>
-        cell.map { case (fid, fEmb) => (m.coarse(ci)._1, fid, fEmb.toSeq) }
-      }.toDF("cell", "f_id", "f_emb")
-    }
-    val wQC = Window.partitionBy(col("q_id"), col("cell"))
-    val probes = cellProbes.join(broadcast(fineByCell), Seq("cell"))
-      .withColumn("fdot", dotQ("q_emb", "f_emb"))
-      .withColumn("rk", row_number().over(
-        wQC.orderBy(col("fdot").desc, col("f_id").asc)))
-      .filter(col("rk") <= perCell)
-      .select(col("q_id"), col("q_emb"), col("n_q"), col("f_id").as("bucket"))
-    val corpus = withHierBucket(emb, m, "embedding")
-      .select(col("vec_id"), col("embedding"), col("bucket"))
-    val candidates = corpus
-      .join(broadcast(probes), Seq("bucket"))
-      .filter(col("vec_id") =!= col("q_id"))
-      .withColumn("n_emb", normQ("embedding"))
-      .withColumn("dot_q", dotQ("q_emb", "embedding"))
-      .withColumn("cos_ppm", expr(
-        "CAST(floor(CAST(dot_q AS DOUBLE) * 1000000.0 / (sqrt(CAST(n_q AS DOUBLE)) * sqrt(CAST(n_emb AS DOUBLE)))) AS BIGINT)"))
-    topkPerQuery(candidates, "cos_ppm", 5)
+    exactSearch(withHierBucket(emb, m, "embedding")
+        .select(col("vec_id"), col("embedding"), col("bucket")),
+      queries(emb), twoLevelFor(m, nlist))
+  }
+
+  /** Fine buckets probed per coarse cell: ~[[nprobeFor]] in total over
+    * the [[cprobeFor]] cells, at least one.
+    */
+  def perCellFor(nlist: Int): Int =
+    math.max(1, nprobeFor(nlist) / cprobeFor(ncoarseFor(nlist)))
+
+  /** The live two-level routing of an nlist-wide index. */
+  private def twoLevelFor(m: HierModel, nlist: Int): Routing =
+    Routing.TwoLevel(m, cprobeFor(ncoarseFor(nlist)), perCellFor(nlist))
+
+  /** A two-level model's fine centroids as the relation (cell, f_id,
+    * f_emb): nlist rows, broadcast against the tiny probed-cells set,
+    * never the corpus.
+    */
+  private def fineByCell(spark: SparkSession, m: HierModel): DataFrame = {
+    import spark.implicits._
+    m.cells.zip(m.coarse).flatMap { case (cell, (gid, _)) =>
+      cell.map { case (fid, fEmb) => (gid, fid, fEmb.toSeq) }
+    }.toDF("cell", "f_id", "f_emb")
   }
 
   /** q255: recall audit of the hierarchical search — per query, how
@@ -1968,58 +1996,6 @@ object Similarity {
       .withColumn("rebal_recall_ppm", expr("n_rebal_hit * 1000000 DIV n_true"))
   }
 
-  /** The ADC pipeline with TWO-LEVEL probe selection — [[adcSearch]]'s
-    * broadcast layout and slice rule with the flat probe ranking
-    * swapped for the q254 coarse→per-cell discipline. ONE body shared
-    * by the committed-artifact serve (q263, [[AnnIndex]]) and the live
-    * parity twin below so the probe/LUT semantics cannot drift.
-    * `fineByCell` is the (cell, f_id, f_emb) model relation (nlist
-    * rows, broadcast against the tiny probed-cells set).
-    */
-  private[operators] def hierAdcSearch(corpus: DataFrame, qAll: DataFrame,
-      coarse: Seq[(Long, Array[Float])], fineByCell: DataFrame,
-      pqCents: Seq[(Long, Array[Float])], cprobe: Int, perCell: Int,
-      k: Int, nQueries: Long): DataFrame = {
-    val lutCols = (0 until PqSubspaces).map { m =>
-      call_function(graft.functions.GraftFunctions.L2TableName,
-        slice(col("q_emb"), m * PqSubDim + 1, PqSubDim),
-        subCodebookLit(pqCents, m)).as(s"lut_$m")
-    }
-    val adc = (0 until PqSubspaces).map { m =>
-      element_at(col(s"lut_$m"), (col(s"code_$m") + 1).cast("int"))
-    }.reduce(_ + _)
-    def sliceTopk(cand0: DataFrame, q: DataFrame): DataFrame = {
-      val cellProbes = q
-        .select(col("q_id"), col("q_emb"),
-          explode(slice(sort_array(probeRanking(coarse, "q_emb")), 1, cprobe))
-            .as("p"))
-        .select(col("q_id"), col("q_emb"), col("p.c_id").as("cell"))
-      val wQC = Window.partitionBy(col("q_id"), col("cell"))
-      val probes = cellProbes.join(broadcast(fineByCell), Seq("cell"))
-        .withColumn("fdot", dotQ("q_emb", "f_emb"))
-        .withColumn("rk", row_number().over(
-          wQC.orderBy(col("fdot").desc, col("f_id").asc)))
-        .filter(col("rk") <= perCell)
-        .select(col("q_id"), col("f_id").as("bucket"))
-      val qlut = q.select(col("q_id") +: lutCols: _*)
-      val candidates = cand0.join(broadcast(probes), Seq("bucket"))
-        .filter(col("vec_id") =!= col("q_id"))
-        .join(broadcast(qlut), Seq("q_id"))
-        .withColumn("adc_q", adc)
-      topkPerQuery(candidates, "adc_q", 5, asc = true)
-    }
-    val s = lutSlices(nQueries, k)
-    if (s == 1) sliceTopk(corpus, qAll)
-    else {
-      val shared = corpus.persist(StorageLevel.MEMORY_AND_DISK)
-      try (0 until s).map { i =>
-        sliceTopk(shared, qAll.filter(pmod(col("q_id"), lit(s.toLong)) === i))
-          .localCheckpoint()
-      }.reduce(_.unionAll(_))
-      finally shared.unpersist()
-    }
-  }
-
   /** The LIVE twin of the q263 committed-artifact ADC serve — the same
     * rebalanced routing, PQ coding and two-level ADC discipline with
     * nothing read from the lake; AnnIndexSpec asserts serve ≡ live (the
@@ -2041,25 +2017,13 @@ object Similarity {
     withFns(spark)
     val n = Tables.rowCountFromFooters(spark, dir, "embeddings")
     val nlist = nlistFor(n)
-    val ncoarse = ncoarseFor(nlist)
-    val cprobe = cprobeFor(ncoarse)
-    val perCell = math.max(1, nprobeFor(nlist) / cprobe)
     val k = if (derivedWidth) pqKFor(n) else pqKCappedFor(n)
     val pqCents = centroidLits(spark, dir, k)
     val (updated, re, release) = hierRebalanced(spark, dir)
-    val corpus = withPqDistanceArrays(
-      re.select(col("vec_id"), col("embedding"),
-        col("bucket_new").as("bucket")), pqCents)
-      .select(col("vec_id") +: col("bucket") +:
-        (0 until PqSubspaces).map(m => pqCode(m).as(s"code_$m")): _*)
-    val fineByCell = {
-      import spark.implicits._
-      updated.cells.zipWithIndex.flatMap { case (cell, ci) =>
-        cell.map { case (fid, fEmb) => (updated.coarse(ci)._1, fid, fEmb.toSeq) }
-      }.toDF("cell", "f_id", "f_emb")
-    }
-    val out = hierAdcSearch(corpus, queries(Tables.embeddings(spark, dir)),
-      updated.coarse, fineByCell, pqCents, cprobe, perCell, k, n / 100L + 1L)
+    val corpus = pqCoded(re.select(col("vec_id"), col("embedding"),
+      col("bucket_new").as("bucket")), pqCents)
+    val out = adcSearch(corpus, queries(Tables.embeddings(spark, dir)),
+      twoLevelFor(updated, nlist), pqCents, k, n / 100L + 1L)
       .localCheckpoint()
     release()
     out

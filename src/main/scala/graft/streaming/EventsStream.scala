@@ -439,9 +439,17 @@ object EventsStream {
     require(!graft.util.Par.regionActive,
       "streaming drain inside a Par region: withStatePartitions mutates " +
         "session-global spark.sql.shuffle.partitions")
-    val key = "spark.sql.shuffle.partitions"
+    withSessionConf(spark, "spark.sql.shuffle.partitions",
+      statePartitionsFor(spark, nRows).toString)(f)
+  }
+
+  /** Run `f` with the session conf `key` set to `value`, then restore
+    * the previous value, or unset the key when it had none.
+    */
+  private def withSessionConf[A](spark: SparkSession, key: String,
+      value: String)(f: => A): A = {
     val prev = spark.conf.getOption(key)
-    spark.conf.set(key, statePartitionsFor(spark, nRows).toString)
+    spark.conf.set(key, value)
     try f
     finally prev match {
       case Some(v) => spark.conf.set(key, v)
@@ -477,16 +485,9 @@ object EventsStream {
     * ever run concurrently with other streams, give them a cloned
     * session (`spark.newSession()`) so the conf flip is isolated.
     */
-  private def withNoDataBatchesDisabled[A](spark: SparkSession)(f: => A): A = {
-    val key = "spark.sql.streaming.noDataMicroBatches.enabled"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "false")
-    try f
-    finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
+  private def withNoDataBatchesDisabled[A](spark: SparkSession)(f: => A): A =
+    withSessionConf(spark, "spark.sql.streaming.noDataMicroBatches.enabled",
+      "false")(f)
 
   def scdClosedDrain(spark: SparkSession, dir: String): DataFrame =
     drainToTable(spark, dir, "q127_scd")(

@@ -27,33 +27,6 @@ object TimeLab {
     import org.apache.spark.sql.functions._
     spark.range(1000000L).selectExpr("sum(id)").collect()
 
-    // `relational` mode: time the heavy non-dedup bench queries twice each
-    // (cold = plan + codegen + exec, warm = mostly exec) to localize where
-    // the time goes without rerunning the whole bench.
-    if (args.length > 1 && args(1) == "relational") {
-      for (_ <- 1 to 2) {
-        cnt("q01 pricing", graft.operators.Relational.pricingSummary(spark, dir))
-        cnt("q04 region_revenue", graft.operators.Relational.regionRevenue(spark, dir))
-        cnt("q35 fingerprint", graft.operators.TextOps.fingerprintClusters(spark, dir))
-        cnt("q35 fp scan+md5 only", Tables.documents(spark, dir)
-          .select(graft.operators.TextOps.fingerprint(col("text")).as("fp")))
-        cnt("q35 norm only", Tables.documents(spark, dir)
-          .select(lower(regexp_replace(trim(col("text")), "\\s+", " ")).as("n")))
-        cnt("q58 json_struct", graft.operators.EventsOps.jsonStructParse(spark, dir))
-      }
-      spark.stop()
-      return
-    }
-    // `pagerank` mode: localize q154's cost — edge build vs per-iteration
-    if (args.length > 1 && args(1) == "pagerank") {
-      import graft.operators.GraphOps
-      val edges = GraphOps.tradeEdges(spark, dir)
-      time("edges build+count")(println("[timelab] edges=" + edges.count()))
-      for (i <- Seq(1, 2, 4, 6))
-        cnt(s"pagerank iters=$i", GraphOps.pagerank(edges, i))
-      spark.stop()
-      return
-    }
     // `jobs` mode: run ONE declared query with a SparkListener that
     // prints every job's description, duration and task count — the
     // lifecycle queries are dozens of small sequential jobs and this
@@ -123,33 +96,6 @@ object TimeLab {
       }
       vals.foreach { v =>
         println(f"[timelab-confab] TOTAL $v=${names.map(q => acc((q, v))).sum}%6.2f")
-      }
-      spark.stop()
-      return
-    }
-    // `streamckpt` mode: A/B the streaming state checkpoint location
-    // (default /tmp temp dir vs tmpfs) for the heaviest stream-join
-    // drain — isolates state-store commit IO from join compute.
-    if (args.length > 1 && args(1) == "streamckpt") {
-      val fn = graft.SparkEntry.queries("q167_stream_full_attrib")
-      for (_ <- 1 to 2)
-        cnt("q167 ckpt=default", fn(spark, dir))
-      spark.conf.set("spark.sql.streaming.checkpointLocation",
-        "/dev/shm/graft_ckpt_ab")
-      for (_ <- 1 to 2)
-        cnt("q167 ckpt=tmpfs", fn(spark, dir))
-      spark.conf.unset("spark.sql.streaming.checkpointLocation")
-      spark.stop()
-      return
-    }
-    // `pq` mode: localize q83's cost — coded corpus, probe side, full
-    // search, and the search without its top-k window
-    if (args.length > 1 && args(1) == "pq") {
-      import graft.operators.Similarity
-      for (_ <- 1 to 2) {
-        cnt("q81 pqCodes", Similarity.pqCodes(spark, dir))
-        cnt("q42 ivf knn", Similarity.ivfKnn(spark, dir))
-        cnt("q83 full", Similarity.ivfPqSearch(spark, dir))
       }
       spark.stop()
       return
